@@ -28,7 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output schema: (key string, page int, body string). One InputPartition
   * per `keysPerPartition` keys — partition planning mirrors the
   * reference's per-key fetch loops but distributes them; the transport is
-  * constructed per partition reader (connection reuse, S6 note).
+  * constructed per partition reader (connection reuse, S6 note). A batch
+  * partition's keys run through the same fetch window as
+  * [[RestScan.paginated]]; the streaming reader stays sequential.
   * Column pruning (SupportsPushDownRequiredColumns) reaches the reader:
   * un-projected columns are never materialized into rows — though the
   * fetch itself always happens, since pagination needs the body to find
@@ -138,7 +140,7 @@ private[sources] case class RestInputPartition(keys: Seq[String])
   * per finished key per batch, and `maxPages` caps the total. Origins
   * that answer past-the-end pages with 4xx instead of an empty payload
   * are handled: a client error IS the terminator for that key's window
-  * (transient 5xx/transport failures still fail the task and retry).
+  * (transient 5xx/429/transport failures still fail the task and retry).
   *
   * Implements [[SupportsAdmissionControl]] so the engine hands the
   * current start offset to `latestOffset(start, limit)`: the next window
@@ -213,9 +215,9 @@ private[sources] case class RestStreamReaderFactory(urlTemplate: String,
           // 4xx past a key's last page is a terminator, not a failure:
           // the stream re-probes finished keys every window (stateless
           // offsets), and many origins 404 beyond the end. Transport
-          // throws IllegalStateException exactly for client errors;
-          // transient errors (IOException after retries) still
-          // propagate and fail the task.
+          // throws IllegalStateException exactly for client errors other
+          // than 429; transient errors, throttling included (IOException
+          // after retries), still propagate and fail the task.
           try Some((key, page, transport.get(url)))
           catch { case _: IllegalStateException => None }
         }
@@ -250,28 +252,12 @@ private[sources] case class RestReaderFactory(urlTemplate: String,
       case "rating" => RestScan.ratingLastPage
       case _ => RestScan.productLastPage
     }
-    val rows: Iterator[(String, Int, String)] = keys.iterator.flatMap { key =>
-      var terminated = false
-      Iterator.from(1)
-        .take(maxPages)
-        .map { page =>
-          val url = urlTemplate
-            .replace("{key}", key).replace("{page}", page.toString)
-          (key, page, transport.get(url))
-        }
-        .takeWhile { case (_, _, body) =>
-          terminated = isLast(body); !terminated
-        } ++ {
-        // Same loud-truncation rule as RestScan.paginated: exhausting
-        // maxPages without a terminator is invisible data loss if
-        // silent. (A pushed LIMIT stops pulling before this evaluates,
-        // so bounded scans never trip it.)
-        if (!terminated) throw new IllegalStateException(
-          s"graft-rest scan for key '$key' exceeded maxPages=$maxPages " +
-            "without a terminator page")
-        Iterator.empty
-      }
-    }.take(limit) // pushed LIMIT: stops the fetch loop, not just output
+    // Same fetch loop, window and loud-truncation rule as
+    // RestScan.paginated. The pushed LIMIT caps each key's loop and stops
+    // pulling; the window then cancels whatever is still in flight.
+    val rows = FetchWindow.pages(keys.iterator,
+      (key, page) => urlTemplate.replace("{key}", key).replace("{page}", page.toString),
+      transport, isLast, maxPages, limit).take(limit)
     new PartitionReader[InternalRow] {
       private var current: (String, Int, String) = _
       override def next(): Boolean = {

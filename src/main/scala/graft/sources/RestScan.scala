@@ -12,6 +12,15 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * executors the keys DataFrame is simply repartitioned to spread origin
   * load; retry and rate limiting live inside [[Transport]].
   *
+  * Within a task, up to `FetchWindow.Width` (16) keys are fetched at once
+  * on a daemon pool owned by the task, while each key's pages stay
+  * sequential and rows come out in input-key order, pages in page order
+  * — the same rows, order and request count as a one-request-at-a-time
+  * loop (see `FetchWindow`). So a scan keeps up to executors × cores × 16
+  * requests in flight against the origin; an [[HttpTransport]] with
+  * `rateLimitMs` caps each task at one request per `rateLimitMs` however
+  * wide the window.
+  *
   * Both reference termination conventions are preserved as explicit
   * predicates (SURVEY §2.1 S4 vs S7): products stop on `data: null`
   * (etl.py:58), ratings stop on an empty array (etl.py:140). The
@@ -31,31 +40,14 @@ object RestScan {
       transport: Transport, isLastPage: String => Boolean,
       maxPages: Int = 100000): Dataset[(String, Int, String)] = {
     import keys.sparkSession.implicits._
-    keys.mapPartitions { it =>
-      it.flatMap { key =>
-        var terminated = false
-        Iterator.from(1)
-          .take(maxPages)
-          .map(page => (key, page, transport.get(urlFor(key, page))))
-          .takeWhile { case (_, _, body) =>
-            terminated = isLastPage(body); !terminated
-          } ++ {
-          if (!terminated) throw new IllegalStateException(
-            s"paginated scan exceeded maxPages=$maxPages without a " +
-              "terminator page — raise maxPages or fix the origin")
-          Iterator.empty
-        }
-      }
-    }
+    keys.mapPartitions(FetchWindow.pages(_, urlFor, transport, isLastPage, maxPages))
   }
 
   /** One fetch per key (the S6 detail-fetch shape): (key, body) rows. */
   def perKey(keys: Dataset[String], urlFor: String => String,
       transport: Transport): Dataset[(String, String)] = {
     import keys.sparkSession.implicits._
-    keys.mapPartitions { it =>
-      it.map(key => (key, transport.get(urlFor(key))))
-    }
+    keys.mapPartitions(FetchWindow.single(_, urlFor, transport))
   }
 
   /** Terminator for the product scan: the `data` field is JSON null

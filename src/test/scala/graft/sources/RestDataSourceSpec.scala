@@ -79,6 +79,39 @@ class RestDataSourceSpec extends AnyFunSuite with SparkTestBase {
       s"fetched ${RestDataSourceSpec.fetches.get()} pages for LIMIT 3")
   }
 
+  test("a multi-key partition runs through the fetch window in key order") {
+    import RestScanSpec._
+    reset()
+    TransportRegistry.put("tsleepy", new SleepyTransport)
+    val keys = (0 until 32).map(i => s"k$i")
+    val df = spark.read.format("graft-rest")
+      .option("keys", keys.mkString(","))
+      .option("keysPerPartition", "32")
+      .option("urlTemplate", "u/{key}/{page}")
+      .option("transport", "tsleepy")
+      .load()
+    assert(df.rdd.getNumPartitions == 1)
+    val got = df.as[(String, Int, String)].collect().toSeq
+    assert(got == (for (k <- keys; p <- 1 to dataPages(k)) yield (k, p, body(k, p))))
+    assert(requests.get == keys.map(dataPages(_) + 1).sum)
+    assert(peak.get > 1, "only one request was ever in flight")
+  }
+
+  test("a pushed LIMIT over a multi-key partition cancels the window's fetches") {
+    TransportRegistry.put("tsleepy2", new SleepyTransport)
+    val got = spark.read.format("graft-rest")
+      .option("keys", (0 until 32).map(i => s"k$i").mkString(","))
+      .option("keysPerPartition", "32")
+      .option("urlTemplate", "u/{key}/{page}")
+      .option("transport", "tsleepy2")
+      .load().limit(3).collect()
+    assert(got.length == 3)
+    // Fetchers of keys past the limit block on full buffers until the
+    // task's completion listener shuts their pool down.
+    val alive = RestScanSpec.lingeringFetchThreads()
+    assert(alive.isEmpty, s"fetch threads still alive: $alive")
+  }
+
   test("streams the paginated scan incrementally across micro-batches") {
     TransportRegistry.put("tstream", new FakeTransport(Map(
       "u/a/1" -> """{"data": [1]}""",
