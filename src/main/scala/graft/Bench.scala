@@ -7,194 +7,85 @@ package graft
   * which lets Spark skip column evaluation entirely for projection-only
   * plans, noop forces every output row and column to be produced, so the
   * timings measure real work. Each query is timed WARMED — run twice,
-  * second run reported — so JVM/codegen/JIT startup lands on no query;
-  * headline queries additionally re-run warmed in a FRESH FORKED JVM
-  * and report the min of the two warmed numbers (suite-position
-  * JVM-context inflation bound — see the min-over-contexts note below).
+  * second run reported — so JVM/codegen/JIT startup lands on no query.
+  * That in-suite second run is the one definition of every row; a
+  * fresh-JVM timing of a subset is `scripts/ab.sh`, and end-to-end cost
+  * (session start, cold runs) is `perfbench/`.
   */
 object Bench {
 
-  /** Parses the `"queries":{...}` map out of a contract-shaped line —
-    * the ONE parser for both the forked child's stdout and the
-    * committed BENCH_FULL_LOCAL.json sidecar (both come from the same
-    * line() template; two hand-rolled copies of this regex would let a
-    * shape change silently empty one of them). */
-  private[graft] def parseQueriesMap(s: String): Map[String, Double] = {
-    val qs = s.indexOf("\"queries\":")
-    if (qs < 0) Map.empty
-    else {
-      // Bound the scan at the queries object's closing brace (the map is
-      // flat, so the first '}' after the marker closes it): the line()
-      // template appends numeric fields AFTER the object (n_failed
-      // today, anything tomorrow), and an unbounded scan would parse
-      // them as queries (r12 ADVICE).
-      val end = s.indexOf('}', qs)
-      val span = if (end < 0) s.substring(qs) else s.substring(qs, end + 1)
-      """"(\w+)":([0-9]+\.[0-9]+)""".r.findAllMatchIn(span)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
+  /** Fixed flagships (one per operator family — stable anchors for
+    * round-over-round comparison); the dynamic top-20 joins them in the
+    * headline so whatever regresses rides the contract line. */
+  private val flagships = Seq(
+    "q1_agg", "q3_join_agg", "q8_market_share", "q_topk_perkey_native",
+    "ref_l2_upsert", "dedup_exact", "dedup_minhash_pairs",
+    "dedup_minhash_fast", "knn_cosine_topk_native", "events_anomaly",
+    "text_bpe_merges", "docs_quality_filter", "pipeline_curation")
 
-  /** A degraded-session verdict needs at least this many overlapping
-    * flagship ratios: with fewer, a single outlier decides the median
-    * (at 2, the MAX decides), and parking a healthy run on one noisy
-    * flagship is worse than missing one drifted session (r13 ADVICE).
-    * The real flagship list is 13 queries, all ≥ 0.3 s — overlap only
-    * thins when the committed baseline predates several renames. */
-  private[graft] val MinFlagshipOverlap = 5
-
-  /** Median of this run's flagship times over the committed baseline's
-    * (both sides min-over-contexts; prev < 0.3 s rows skipped — tiny
-    * queries are pure noise). > 1.2 marks a degraded SESSION: flagship
-    * plans are the stable anchors, so the code cannot move their median
-    * while leaving individual movers at par (the r12 failure signature
-    * was exactly the reverse). TRUE median (even-size overlap averages
-    * the two middle ratios — the upper median let one outlier tip the
-    * verdict, r13 ADVICE); fewer than [[MinFlagshipOverlap]] overlapping
-    * rows → 1.0 (no verdict — the sample can't support one). */
-  private[graft] def medianFlagshipRatio(cur: Map[String, Double],
-      prev: Map[String, Double], flagships: Seq[String]): Double = {
-    val rs = flagships.flatMap { n =>
-      for { p <- prev.get(n) if p >= 0.3; t <- cur.get(n) } yield t / p
-    }.sorted
-    if (rs.size < MinFlagshipOverlap) 1.0
-    else if (rs.size % 2 == 1) rs(rs.size / 2)
-    else (rs(rs.size / 2 - 1) + rs(rs.size / 2)) / 2.0
-  }
-
-  /** Promotes (healthy) or parks (rejected) the fork's isolated-timing
-    * CANDIDATE sidecar — the r14 fix for the r13 rejection-path
-    * clobber: [[forkIsolated]] runs BEFORE session health is known, so
-    * it writes BENCH_ISOLATED_CANDIDATE.json and this promotion —
-    * called once the degraded-session verdict exists — is the only
-    * writer of BENCH_ISOLATED.json. Healthy → candidate becomes
-    * BENCH_ISOLATED.json; rejected → candidate parks as
-    * BENCH_ISOLATED_REJECTED.json and the committed BENCH_ISOLATED.json
-    * is left byte-identical (BenchSpec-pinned). No candidate on disk
-    * (fork skipped or crashed before its stub) → nothing moves. */
-  private[graft] def promoteIsolated(rejected: Boolean,
-      dir: java.nio.file.Path = java.nio.file.Paths.get(".")): Unit = {
-    val cand = dir.resolve("BENCH_ISOLATED_CANDIDATE.json")
-    if (!java.nio.file.Files.exists(cand)) return
-    val target =
-      if (rejected) "BENCH_ISOLATED_REJECTED.json" else "BENCH_ISOLATED.json"
-    java.nio.file.Files.move(cand, dir.resolve(target),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Re-times `names` warmed in a freshly forked JVM (the isolated
-    * SPARK_GRAFT_ONLY protocol) and returns the per-query seconds, or
-    * None if the child cannot be launched, times out, or its contract
-    * line cannot be parsed — the caller then falls back to in-process
-    * re-timing. The child is this same main with SPARK_GRAFT_ONLY set,
-    * launched with the parent's exact JVM args (add-opens, -Xmx, -D
-    * flags) and classpath, so it benchmarks the identical engine
-    * config with none of the 200-plan JIT/GC context. Also dumps the
-    * child's numbers to BENCH_ISOLATED_CANDIDATE.json — promoted to
-    * BENCH_ISOLATED.json only once the degraded-session guard rules
-    * the session healthy ([[promoteIsolated]]), so a rejected run can
-    * never clobber the committed calibration. */
-  private def forkIsolated(names: Seq[String], sfDir: String,
-                           cpus: String): Option[Map[String, Double]] = {
-    if (sys.env.contains("SPARK_GRAFT_FORKED")) return None // no recursion
-    try {
-      import scala.jdk.CollectionConverters._
-      val javaBin = java.nio.file.Paths
-        .get(System.getProperty("java.home"), "bin", "java").toString
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-      val cmd = (Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      pb.environment().put("SPARK_GRAFT_ONLY", names.mkString(","))
-      pb.environment().put("SPARK_GRAFT_FORKED", "1")
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val proc = pb.start()
-      // Drain stdout as it arrives (a full pipe buffer would deadlock
-      // waitFor); keep only the last contract-shaped line. A watchdog
-      // kills a hung child so the parent's contract run always ends.
-      // The drain/waitFor sits in try/finally so that an IOException
-      // mid-drain never leaves an orphaned child JVM benchmarking for
-      // up to 30 min concurrently with the in-process fallback (which
-      // would both inflate the fallback numbers and double host load).
-      val killer = new java.util.Timer(true)
-      killer.schedule(new java.util.TimerTask {
-        def run(): Unit = proc.destroyForcibly()
-      }, 30L * 60 * 1000)
-      try {
-        val in = new java.io.BufferedReader(
-          new java.io.InputStreamReader(proc.getInputStream, "UTF-8"))
-        var last: String = null
-        var ln = in.readLine()
-        while (ln != null) {
-          if (ln.startsWith("{\"metric\"")) last = ln
-          ln = in.readLine()
-        }
-        val rc = proc.waitFor()
-        if (rc != 0 || last == null) {
-          System.err.println(s"[bench] fork failed (rc=$rc, line=${last != null}); falling back to in-process second context")
-          return None
-        }
-        // Parse the child's "queries":{...} map — our own shape, emitted
-        // by the shared line() template below (names are [A-Za-z0-9_]).
-        val parsed = parseQueriesMap(last)
-          .filter { case (n, _) => names.contains(n) }
-        if (parsed.isEmpty) { System.err.println("[bench] fork parse empty; falling back"); return None }
-        try {
-          val side = parsed.toSeq.sorted.map { case (k, v) =>
-            "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-          }.mkString("{\"source\":\"fresh-forked-jvm\",\"queries\":{", ",", "}}\n")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get("BENCH_ISOLATED_CANDIDATE.json"),
-            side.getBytes("UTF-8"))
-        } catch { case e: Throwable => System.err.println(s"[bench] isolated sidecar write failed: ${e.getMessage}") }
-        Some(parsed)
-      } finally {
-        killer.cancel()
-        if (proc.isAlive) { proc.destroyForcibly(); proc.waitFor() }
+  /** The contract line for `timings` (query → warmed seconds, None when
+    * the query failed). ONE template for both the sidecar and stdout —
+    * a shape change edited in only one place would silently
+    * desynchronize them.
+    *
+    * Failures are partitioned OUT of the timing map and `value` and
+    * reported as explicit `n_failed`/`failed` fields: dropping a failed
+    * query only from `total` would make a broken engine benchmark as
+    * faster than a working one, and a -1 sentinel corrupts any consumer
+    * that sums the map.
+    *
+    * `headline` restricts `queries` to the flagships plus the TOP-20
+    * most expensive queries of this run: the contract consumer keeps
+    * only the TAIL of our stdout, so the line must stay small or it gets
+    * truncated mid-line and fails to parse (rounds 1-2: 72 per-query
+    * timings made it ~2.5 KB). The dynamic top-20 is the r7 fix for the r6 gap — the
+    * static list omitted the slowest queries, so a regression like
+    * dedup_paragraphs (2.8×) surfaced only in the sidecar. */
+  private[graft] def line(timings: Seq[(String, Option[Double])],
+      sfDir: String, headline: Boolean): String = {
+    val results = timings.collect { case (n, Some(t)) => n -> t }
+    val failed = timings.collect { case (n, None) => n }.sorted
+    val shown =
+      if (!headline) results
+      else {
+        val byName = results.toMap
+        val top20 = results.sortBy { case (n, t) => (-t, n) }.take(20)
+          .map(_._1)
+        (flagships ++ top20).distinct.flatMap(n => byName.get(n).map(n -> _))
       }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] fork error: ${e.getMessage}; falling back to in-process second context")
-        None
-    }
+    // Locale.ROOT: the default-locale f interpolator renders a comma
+    // decimal separator under e.g. de_DE, corrupting the contract JSON.
+    def fmt(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    val queries = shown.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
+    val failedField =
+      if (failed.isEmpty) ""
+      else s""","n_failed":${failed.size},"failed":${failed
+        .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
+    s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec","n_queries":${results.size},"queries":$queries$failedField,"sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default matches the contract environment (local[32], 32 shuffle
-    // partitions); the driver sets no CPU env var, so a conservative
-    // default here would benchmark the engine on 4 of the 32 cores.
+    // Contract runs set no CPU env var, so the default is every core the
+    // JVM sees — a conservative constant would leave cores idle.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       String.valueOf(Runtime.getRuntime.availableProcessors()))
     val spark = Sessions.local(cpus)
 
-    def runOnce(name: String): Double = {
+    def runOnce(name: String): Option[Double] = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          return -1.0
+          return None
       }
-      (System.nanoTime() - t0) / 1e9
+      Some((System.nanoTime() - t0) / 1e9)
     }
 
-    // Warmed timing: every query runs TWICE and the SECOND run is the
-    // reported number. Round-5 showed per-query single-shot times swinging
-    // >=2x round-over-round with zero code change (q8_market_share
-    // 1.29->6.52 s, and the family-warmup scheme inverted
-    // dedup_minhash_fast vs _pairs: the alphabetically-earlier oracle
-    // path got warmed numbers while the fast path absorbed cold JIT +
-    // codegen-compile cost of the MinHash aggregate + banding join it
-    // does NOT share with the warmup query). A query's first run is its
-    // own complete warmup — exactly the codegen classes, parquet footers
-    // and JIT profile it needs — so the second run measures steady-state
-    // operator cost, which is the number that tracks plan changes.
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (local iteration on a
     // hotspot subset); the driver never sets it, so contract runs are
     // always the full set.
@@ -202,204 +93,27 @@ object Bench {
       .map(_.split(",").map(_.trim).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // Fixed flagships (one per operator family — stable anchors for
-    // round-over-round comparison); the dynamic top-20 joins them in
-    // the headline so whatever regresses rides the contract line.
-    val flagships = Seq(
-      "q1_agg", "q3_join_agg", "q8_market_share", "q_topk_perkey_native",
-      "ref_l2_upsert", "dedup_exact", "dedup_minhash_pairs",
-      "dedup_minhash_fast", "knn_cosine_topk_native", "events_anomaly",
-      "text_bpe_merges", "docs_quality_filter", "pipeline_curation")
-    val all = names.map { n =>
-      val cold = runOnce(n)
-      // A failed first run is reported as failed without a retry; a
-      // second attempt would hide flaky queries behind a green number.
-      n -> (if (cold < 0) cold else runOnce(n))
-    }
-    // Failures are partitioned OUT of the timing map and reported as an
-    // explicit field: dropping a failed query only from `total` would
-    // make a broken engine benchmark as faster than a working one, and
-    // a -1 sentinel corrupts any consumer that sums the map.
-    val (pass1, failures) = all.partition(_._2 >= 0)
-    val failed = failures.map(_._1)
+    // Warmed timing: every query runs TWICE and the SECOND run is the
+    // reported number. Round-5 showed per-query single-shot times
+    // swinging >=2x round-over-round with zero code change: a query's
+    // first run is its own complete warmup — exactly the codegen
+    // classes, parquet footers and JIT profile it needs — so the second
+    // run measures steady-state operator cost, which is the number that
+    // tracks plan changes. A failed first run is reported as failed
+    // without a retry; a second attempt would hide flaky queries behind
+    // a green number.
+    val timings = names.map(n => n -> runOnce(n).flatMap(_ => runOnce(n)))
 
-    // Min-over-two-contexts for the HEADLINE set (r8, reworked r10):
-    // the r7 driver artifact overstated its top rows by up to 4× vs
-    // isolated warmed timing — suite-position JVM context (JIT profile
-    // pollution, GC pressure from neighbors), not plan changes. r8's
-    // second context was an end-of-suite re-run in the SAME JVM; at
-    // 208 queries that context is itself polluted (r9 verdict measured
-    // dedup_embedding_lsh 10.23 s on the contract line vs 1.50 s
-    // isolated — 6.8× — with zero code change). r10 fix: the second
-    // context is a FRESH FORKED JVM running only the headline subset
-    // (SPARK_GRAFT_ONLY), i.e. exactly the isolated warmed protocol the
-    // judge re-times with. min(in-position, fresh-JVM) bounds the
-    // inflation while never under-reporting steady-state cost (both
-    // numbers are complete warmed runs of the real plan). The fork
-    // falls back to the r8 in-process end-of-suite context if the
-    // child JVM cannot be launched or dies — a measurement aid must
-    // never fail the contract run. Calibration in SCALING.md.
-    // Round-over-round MOVERS join the isolated set (r12, r11 verdict
-    // #2): the fork-isolated second context used to cover only
-    // flagships + this run's top-20 by absolute time, so a sub-4 s
-    // query that regressed >2x vs last round never got a fresh-JVM
-    // re-time and stayed unarbitrated drift for a full round. The
-    // committed BENCH_FULL_LOCAL.json is the previous full-suite warmed
-    // map on this code line; any query >=0.5 s whose warmed time grew
-    // >2x vs it is re-timed isolated this run (capped at 12, worst
-    // ratios first, so a VM-wide slowdown cannot double the fork run).
-    val prevFull: Map[String, Double] = try {
-      val p = java.nio.file.Paths.get("BENCH_FULL_LOCAL.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        // Scale guard: the sidecar carries the sf dir it was measured
-        // at; a baseline from any other scale would flag every query
-        // as a mover (and the run would then overwrite the file with
-        // the new scale's numbers) — cross-scale comparison is never
-        // meaningful, so treat it as no baseline.
-        if (!s.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-        else parseQueriesMap(s)
-      }
-    } catch { case _: Throwable => Map.empty }
-    // Flagships and this run's top-20 are fork-isolated regardless, so
-    // they never compete for mover slots: the committed baseline stores
-    // min(in-suite, fresh-JVM) for headline rows, and comparing THIS
-    // run's in-suite pass1 against that min can read documented
-    // suite-position inflation (up to 6.8x, zero code change) as a >2x
-    // "regression" — crowding the 12-slot cap and evicting genuine
-    // sub-top-20 movers (r12 ADVICE).
-    // ONE top-20 definition: the mover exclusion below and headlineNames
-    // must use the same set, or an edit to one silently re-opens the
-    // crowding this exclusion fixes.
-    val top20Pass1 = pass1.sortBy { case (n, t) => (-t, n) }.take(20)
-      .map(_._1)
-    val alwaysHeadlined = (flagships ++ top20Pass1).toSet
-    val movers = pass1
-      .filter { case (n, t) =>
-        !alwaysHeadlined(n) && t >= 0.5 &&
-          prevFull.get(n).exists(prev => prev > 0 && t > 2 * prev) }
-      .sortBy { case (n, t) => (-(t / prevFull(n)), n) }
-      .take(12).map(_._1)
-    val headlineNames = (flagships ++ movers ++ top20Pass1).distinct
-      .filter(pass1.toMap.contains)
-    // While the child runs, this parent (same -Xmx, heap populated by
-    // the 200-query suite) stays resident — peak host footprint is ~2×
-    // the contract heap (2×8 g against 128 g here; a host sized near
-    // 1× would swap and skew the child). Release what the parent can
-    // before forking so its resident set shrinks toward live data.
-    val forked = if (only.isDefined) None else {
-      try spark.catalog.clearCache() catch { case _: Throwable => }
-      System.gc()
-      forkIsolated(headlineNames, sfDir, cpus)
-    }
-    if (only.isEmpty && forked.isEmpty) {
-      // Mark the CANDIDATE so a stale BENCH_ISOLATED.json from an
-      // earlier code state can never pose as this run's fresh-JVM
-      // numbers: on a healthy verdict the stub is promoted over it
-      // (exactly the old behavior), on a rejected one it parks in
-      // _REJECTED and the committed file stays untouched.
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_ISOLATED_CANDIDATE.json"),
-        "{\"source\":\"fork-failed\",\"queries\":{}}\n".getBytes("UTF-8"))
-      catch { case _: Throwable => }
-    }
-    val pass2 = forked.getOrElse {
-      headlineNames.map(n => n -> runOnce(n)).filter(_._2 >= 0).toMap
-    }
-    val results = pass1.map { case (n, t) =>
-      n -> math.min(t, pass2.getOrElse(n, t))
-    }
-    val total = results.map(_._2).sum
-
-    // Locale.ROOT: the default-locale f interpolator renders a comma
-    // decimal separator under e.g. de_DE, corrupting the contract JSON.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jsonMap(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-
-    // The driver keeps only the TAIL of our stdout, so the ONE reported
-    // JSON line must stay small or it gets truncated mid-line and fails
-    // to parse (this happened in rounds 1-2: 72 per-query timings made
-    // the line ~2.5 KB). Report a headline subset — one representative
-    // per operator family — on the contract line, and dump the complete
-    // per-query map to a sidecar file for humans.
-    // Headline = flagships + the TOP-20 most expensive queries by THIS
-    // run's warmed time, deduped. The dynamic top-k is the r7 fix for
-    // the r6 gap: the static list omitted the slowest queries, so a
-    // regression like dedup_paragraphs (2.8×) surfaced only in the
-    // sidecar, not the driver artifact. Whatever regresses into the
-    // top-20 now rides the contract line.
-    val byName = results.toMap
-    // Degraded-session verdict, computed ONCE and before the contract
-    // line is built: the rejection must ride the line itself (a
-    // "baseline":"rejected" field) so the round's artifact confronts
-    // it — r13 ADVICE flagged that a stderr note plus a parked file
-    // was silently ignorable, leaving the mover baseline stale until
-    // a human noticed BENCH_FULL_REJECTED.json. A genuine
-    // across-the-board code regression trips this too (the guard
-    // cannot tell them apart from inside one session) — the field is
-    // exactly what forces that arbitration into the next round's
-    // review instead of past it.
-    val medianRatio =
-      if (only.isEmpty) medianFlagshipRatio(byName, prevFull, flagships)
-      else 1.0
-    val sessionRejected = medianRatio > 1.2
-    val top20 = results.sortBy { case (n, t) => (-t, n) }.take(20).map(_._1)
-    // A SPARK_GRAFT_ONLY run is small by construction, so report every
-    // selected query — the headline subset exists only to keep the
-    // 180-query contract line under the driver's tail-capture limit
-    // (72 per-query timings once truncated mid-line, rounds 1-2).
-    val head =
-      if (only.isDefined) results
-      else (flagships ++ top20).distinct
-        .flatMap(n => byName.get(n).map(n -> _))
-    // ONE template for both the sidecar and the contract line — a shape
-    // change edited in only one place would silently desynchronize them.
-    def line(qs: Seq[(String, Double)]): String = {
-      val failedField =
-        if (failed.isEmpty) ""
-        else s""","n_failed":${failed.size},"failed":${failed.sorted
-          .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
-      val baselineField =
-        if (sessionRejected) ""","baseline":"rejected"""" else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":${jsonMap(qs)}$failedField$baselineField,"sf":"$sfDir"}"""
-    }
     // The sidecar records the FULL suite only: a SPARK_GRAFT_ONLY
     // iteration run would otherwise clobber the last complete picture
-    // with a 6-query subset.
-    //
-    // DEGRADED-SESSION GUARD (r13 — r12 verdict #1): the committed
-    // sidecar is the mover detector's ground truth, and r12 overwrote
-    // it twice from a session degrading monotonically through the day
-    // (239.9 → 348.1 s with the code-touched movers measuring at par
-    // isolated) — after which real r13 regressions up to 1.45x would
-    // have read as improvements. If this run's flagship times are
-    // >1.2x the committed flagships at the median (flagship plans are
-    // the stable anchors; both sides are min-over-contexts), the
-    // session — not the code — is the mover, so keep the old baseline
-    // and park this run in BENCH_FULL_REJECTED.json for a human.
-    if (only.isEmpty) try {
-      // The fork wrote this run's fresh-JVM numbers to the CANDIDATE
-      // path (it runs before the session's health is known); now that
-      // the verdict exists, promote them — or park them, leaving the
-      // committed BENCH_ISOLATED.json byte-identical on rejection.
-      try promoteIsolated(sessionRejected)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] isolated promote failed: ${e.getMessage}") }
-      val target =
-        if (sessionRejected) {
-          System.err.println(f"[bench] session degraded (median flagship " +
-            f"ratio $medianRatio%.2f vs committed baseline > 1.2); keeping " +
-            "the committed BENCH_FULL_LOCAL.json, writing " +
-            "BENCH_FULL_REJECTED.json instead")
-          "BENCH_FULL_REJECTED.json"
-        } else "BENCH_FULL_LOCAL.json"
-      val p = java.nio.file.Paths.get(target)
-      java.nio.file.Files.write(p, (line(results) + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] sidecar write failed: ${e.getMessage}") }
-    println(line(head))
+    // with a subset. A SPARK_GRAFT_ONLY run is small by construction,
+    // so its stdout line reports every selected query.
+    if (only.isEmpty) try java.nio.file.Files.write(
+      java.nio.file.Paths.get("BENCH_FULL_LOCAL.json"),
+      (line(timings, sfDir, headline = false) + "\n").getBytes("UTF-8"))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] sidecar write failed: ${e.getMessage}") }
+    println(line(timings, sfDir, headline = only.isEmpty))
     spark.stop()
   }
 }

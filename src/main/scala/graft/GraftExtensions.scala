@@ -82,10 +82,6 @@ object GraftFunctions {
   /** Column-API form of the native dot product (same registry caveat). */
   def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
 
-  /** Column-API form of the native squared L2 distance (same registry
-    * caveat). */
-  def sqDist(a: Column, b: Column): Column = call_function("sq_dist", a, b)
-
   /** Unicode normalization (same registry caveat). `form` is one of
     * NFC|NFD|NFKC|NFKD, fixed at plan time. */
   def unicodeNorm(text: Column, form: String): Column =

@@ -24,14 +24,9 @@ object Sessions {
     // AND was faster at every sub-OOM point probed (16.9 vs 20.2 s at
     // 3M events) — there is no small-scale premium to trade away, so
     // the production configuration is the only configuration.
-    // SPARK_GRAFT_STATESTORE=hdfs flips the session back for A/B runs.
     .config("spark.sql.streaming.stateStore.providerClass",
-      sys.env.get("SPARK_GRAFT_STATESTORE") match {
-        case Some("hdfs") => "org.apache.spark.sql.execution.streaming" +
-          ".state.HDFSBackedStateStoreProvider"
-        case _ => "org.apache.spark.sql.execution.streaming" +
-          ".state.RocksDBStateStoreProvider"
-      })
+      "org.apache.spark.sql.execution.streaming" +
+        ".state.RocksDBStateStoreProvider")
     // RocksDB changelog checkpointing (r14, guide §1.2 config tier):
     // per-batch commits upload the batch's CHANGELOG instead of
     // snapshotting every state partition's sst files — the documented
@@ -42,12 +37,8 @@ object Sessions {
     // stream_session 5.05 → 4.01 s, stream_decay 2.00 → 1.76 s,
     // stream_anomaly 2.72 → 2.63 s. State contents are unchanged —
     // this is a checkpoint FORMAT choice, invisible in results.
-    // SPARK_GRAFT_CHANGELOG=off flips it back for cold A/B receipts
-    // (VERDICT r14 #6 asked for a cold-fork confirmation of the r14
-    // warm numbers) — the SPARK_GRAFT_STATESTORE convention.
     .config("spark.sql.streaming.stateStore.rocksdb" +
-      ".changelogCheckpointing.enabled",
-      String.valueOf(!sys.env.get("SPARK_GRAFT_CHANGELOG").contains("off")))
+      ".changelogCheckpointing.enabled", "true")
 
   def local(cpus: String): SparkSession = {
     val s = configure(SparkSession.builder()

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import java.awt.image.BufferedImage
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.ByteArrayInputStream
 
 import javax.imageio.ImageIO
 
@@ -13,7 +13,7 @@ import javax.imageio.ImageIO
   *
   * Everything after the decode is pure pixel arithmetic on the ARGB int
   * raster — no `Graphics2D` rendering, no AWT scaling hints — so
-  * feature vectors, resizes and frame bytes are bit-deterministic across
+  * feature vectors and frame bytes are bit-deterministic across
   * JVMs, which the engine's oracle/golden discipline requires. Decode
   * itself is deterministic for the supported formats (PNG/GIF/BMP are
   * lossless; JPEG decode is fully specified by libjpeg-compatible
@@ -33,28 +33,6 @@ object ImageCodec {
   def decode(bytes: Array[Byte]): Option[BufferedImage] =
     try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
     catch { case _: Exception => None }
-
-  /** Packed 24-bit RGB pixels, row-major — the canonical deterministic
-    * byte form of a decoded raster (3 bytes per pixel, no alpha, no
-    * format-dependent encoder in the loop). */
-  def rgbBytes(img: BufferedImage): Array[Byte] = {
-    val w = img.getWidth; val h = img.getHeight
-    val out = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val argb = img.getRGB(x, y)
-        val i = (y * w + x) * 3
-        out(i) = ((argb >> 16) & 0xFF).toByte
-        out(i + 1) = ((argb >> 8) & 0xFF).toByte
-        out(i + 2) = (argb & 0xFF).toByte
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
 
   /** Fixed-dim feature vector from the decoded raster: the pixel stream
     * (row-major) is cut into `dim` equal cells and each cell contributes
@@ -91,28 +69,6 @@ object ImageCodec {
     out
   }
 
-  /** Nearest-neighbor resize by direct raster sampling — deliberately
-    * NOT `Graphics2D.drawImage` (whose filtering is implementation-
-    * defined and thus non-reproducible). Target pixel (x, y) takes
-    * source pixel (x·sw/tw, y·sh/th). */
-  def resize(img: BufferedImage, targetW: Int, targetH: Int): BufferedImage = {
-    require(targetW > 0 && targetH > 0, s"bad target: ${targetW}x$targetH")
-    val sw = img.getWidth; val sh = img.getHeight
-    val out = new BufferedImage(targetW, targetH, BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < targetH) {
-      val sy = (y.toLong * sh / targetH).toInt
-      var x = 0
-      while (x < targetW) {
-        val sx = (x.toLong * sw / targetW).toInt
-        out.setRGB(x, y, img.getRGB(sx, sy))
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   /** Horizontal-band "frames": the decoded raster split into bands of
     * `bandRows` rows, each emitted as packed RGB bytes — the image-side
     * analogue of video frame extraction (one media row fans out to many
@@ -141,19 +97,4 @@ object ImageCodec {
     }
   }
 
-  /** PNG-encode (lossless) — fixture/spec helper for building real image
-    * byte columns without shipping binary test assets in the repo. */
-  def encodePng(img: BufferedImage): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  /** JPEG-encode — spec helper proving the lossy decode path works too. */
-  def encodeJpeg(img: BufferedImage): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    // TYPE_INT_RGB required: the JDK JPEG writer rejects alpha rasters.
-    ImageIO.write(img, "jpg", bos)
-    bos.toByteArray
-  }
 }

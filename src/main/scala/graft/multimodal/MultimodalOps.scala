@@ -83,37 +83,6 @@ object MultimodalOps {
       case None => frameSampleStub(bytes, frameSize, every)
     }
 
-  /** Resize dispatch: an image payload decodes, nearest-neighbor
-    * downscales so its longest side is `maxSide` (never upscales), and
-    * re-encodes as PNG — the output is a VALID image under the same
-    * media type, re-decodable downstream. Opaque payloads take the
-    * strided byte-budget stub with `maxSide²·3` as the budget (the raw
-    * size of the image case's worst-case raster). */
-  private[multimodal] def resizeOf(bytes: Array[Byte], mediaType: String,
-      maxSide: Int): Array[Byte] =
-    (if (mediaType != null && mediaType.startsWith("image/"))
-      ImageCodec.decode(bytes)
-    else None) match {
-      case Some(img) =>
-        val side = math.max(img.getWidth, img.getHeight)
-        if (side <= maxSide) bytes
-        else ImageCodec.encodePng(ImageCodec.resize(img,
-          math.max(1, img.getWidth * maxSide / side),
-          math.max(1, img.getHeight * maxSide / side)))
-      case None => resizeStub(bytes, maxSide * maxSide * 3)
-    }
-
-  /** Media resize over partitions: binary in, bounded binary out, media
-    * id and type preserved — the thumbnailing / normalization leg of an
-    * image-text curation pipeline. */
-  def resizeMedia(media: Dataset[MediaRow], maxSide: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map(r => MediaRow(r.media_id, resizeOf(r.bytes, r.media_type,
-        maxSide), r.media_type))
-    }
-  }
-
   /** Frame extraction as a flatMap over partitions: one media row fans
     * out to its sampled frames — the row-multiplying decode shape
     * (video → frames, audio → windows) — through the per-row codec

@@ -59,12 +59,6 @@ object RefOps {
       .drop("__rn")
   }
 
-  /** U3 relaxed form: keep an arbitrary row per key (what the reference's
-    * semantics actually require — any product of a shop resolves to the
-    * same shop_info, SURVEY §2.3). Cheaper: no sort within groups. */
-  def dedupByKeyAny(keys: Seq[String])(df: DataFrame): DataFrame =
-    df.dropDuplicates(keys)
-
   /** U4 (etl.py:250): distinct union of two key sets. */
   def distinctKeys(key: String)(a: DataFrame, b: DataFrame): DataFrame =
     a.select(key).union(b.select(key)).distinct()

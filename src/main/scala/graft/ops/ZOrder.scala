@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) multi-dimensional clustering — the data-layout tool
@@ -31,13 +31,4 @@ object ZOrder {
       b * n + i)
     terms.reduce(_ bitwiseOR _)
   }
-
-  /** Rewrite `df` in z-order: a range-partitioned sort on the Morton
-    * code (plus `tieBreak` for a total order). Each output partition
-    * covers a compact z-range = a small hyper-rectangle stack of the
-    * key space; writing these partitions as files gives every
-    * interleaved column tight per-file min/max bounds. */
-  def clusterBy(df: DataFrame, bits: Int, cols: Seq[Column],
-      tieBreak: Seq[Column] = Nil): DataFrame =
-    df.orderBy(zValue(cols, bits) +: tieBreak: _*)
 }

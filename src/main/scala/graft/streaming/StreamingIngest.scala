@@ -36,22 +36,23 @@ object StreamingIngest {
     * story (docs-written/index-crashed reconverges on replay) already
     * covers every interleaving, so ordering between them was never
     * load-bearing. The second job's tasks back-fill executor slots the
-    * first job's tail leaves idle. Failures propagate after both
-    * complete (never abandon a running write mid-flight).
-    * SPARK_GRAFT_SEQWRITES=1 restores sequential writes for A/B runs —
-    * the SPARK_GRAFT_STATESTORE convention; the driver never sets it. */
-  private def writeBoth(a: => Unit, b: => Unit): Unit = {
-    if (sys.env.get("SPARK_GRAFT_SEQWRITES").contains("1")) { a; b; return }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    // Await both before rethrowing either, so a failed docs write can
-    // never leave the index write running against a torn table.
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    ra.get; rb.get
+    * first job's tail leaves idle.
+    *
+    * `a` runs on the calling thread, `b` on a thread this call creates:
+    * a fresh thread inherits the caller's Spark local properties (job
+    * group, scheduler pool, SQL execution id) as they are NOW, which a
+    * pooled thread reused across calls does not, and no shared pool
+    * thread sits blocked for a whole Spark job. Both are joined before
+    * either failure is rethrown (`a`'s first), so a failed docs write
+    * never leaves the index write running against a torn table. */
+  private[streaming] def writeBoth(a: => Unit, b: => Unit): Unit = {
+    var failedB: Throwable = null
+    val t = new Thread(() => try b catch { case e: Throwable => failedB = e },
+      "graft-ingest-write")
+    t.setDaemon(true)
+    t.start()
+    try a finally t.join()
+    if (failedB != null) throw failedB
   }
 
   private val fpSchema = StructType(Seq(StructField("fp", StringType)))

@@ -51,16 +51,6 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec,
   */
 object Spread {
 
-  /** A/B kill switch (the SPARK_GRAFT_STATESTORE convention): set
-    * SPARK_GRAFT_NOSPREAD=1 to disable [[spreadInput]] (plain-scan
-    * sites), =reps to disable [[spreadLike]] (the representatives
-    * path), =all for both — cold-fork arbitration runs flip one arm
-    * without recompiling. Never set by the driver. */
-  private val noSpread: Set[String] = sys.env.get("SPARK_GRAFT_NOSPREAD")
-    .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
-  private def off(tag: String): Boolean =
-    noSpread.contains(tag) || noSpread.contains("all")
-
   /** Narrow scan chain: partition count derives from split planning
     * alone, so probing it can never run a job. `sparkPlan` is the
     * pre-preparation physical plan — joins/aggregates appear directly
@@ -88,7 +78,6 @@ object Spread {
   }
 
   def spreadInput(df: DataFrame, key: Column): DataFrame = {
-    if (off("1")) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (p <= 1) return df
     narrowChainPartitions(df) match {
@@ -107,7 +96,6 @@ object Spread {
     * scale signal. At warehouse scale the source splits, the condition
     * is false, and the target flows through untouched. */
   def spreadLike(probe: DataFrame, target: DataFrame, key: Column): DataFrame = {
-    if (off("reps")) return target
     val p = target.sparkSession.sparkContext.defaultParallelism
     if (p <= 1 || target.isStreaming) return target
     narrowChainPartitions(probe) match {

@@ -2,104 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Regression pins for Bench's pure calibration logic (r13): the
-  * contract-line parser's brace bound (r12 ADVICE — trailing template
-  * fields must never parse as queries) and the degraded-session
-  * guard's median flagship ratio. No SparkSession needed. */
+/** Pins Bench's contract-line template (pure; no SparkSession). */
 class BenchSpec extends AnyFunSuite {
 
-  test("parseQueriesMap stops at the queries object's closing brace") {
-    val line = """{"metric":"total","value":259.281,"unit":"sec",""" +
-      """"n_queries":2,"queries":{"q1_agg":0.702,"q3_join_agg":1.524},""" +
-      """"n_failed":1,"failed":["qx"],"drift_ratio":1.450,""" +
-      """"sf":"/root/testdata/sf0.1"}"""
-    // drift_ratio is a decimal field AFTER the queries object — the
-    // exact shape the r12 ADVICE warned would leak into the map under
-    // an unbounded scan (n_failed alone doesn't trip the regex: it is
-    // integral).
-    assert(Bench.parseQueriesMap(line) ==
-      Map("q1_agg" -> 0.702, "q3_join_agg" -> 1.524))
-    assert(Bench.parseQueriesMap("no queries marker here") == Map.empty)
-    // Unterminated object (truncated tail capture): parse what's there.
-    assert(Bench.parseQueriesMap("""{"queries":{"a":1.5,"b":2.0""") ==
-      Map("a" -> 1.5, "b" -> 2.0))
-  }
-
-  test("medianFlagshipRatio: overlap floor, true median, sub-0.3s exclusion") {
-    val flags = Seq("a", "b", "c", "d", "e", "f", "g")
-    // No baseline → 1.0 (no verdict, sidecar is written).
-    assert(Bench.medianFlagshipRatio(Map("a" -> 1.0), Map.empty, flags)
-      == 1.0)
-    // Healthy session: 5 overlaps, median of {1.0, 1.1, 0.9, 1.0, 1.0}.
-    val prev = Map("a" -> 1.0, "b" -> 2.0, "c" -> 4.0, "d" -> 1.0,
-      "e" -> 3.0)
-    val curOk = Map("a" -> 1.0, "b" -> 2.2, "c" -> 3.6, "d" -> 1.0,
-      "e" -> 3.0)
-    assert(Bench.medianFlagshipRatio(curOk, prev, flags) == 1.0)
-    // Degraded session (the r12 signature — everything ~1.45×).
-    val curBad = Map("a" -> 1.45, "b" -> 2.9, "c" -> 5.8, "d" -> 1.45,
-      "e" -> 4.35)
-    assert(Bench.medianFlagshipRatio(curBad, prev, flags) > 1.2)
-    // MINIMUM OVERLAP (r14, r13 ADVICE): with < MinFlagshipOverlap
-    // overlapping ratios a single outlier decides the verdict — 4
-    // flagships all at 2× still return 1.0 (no verdict), because a
-    // sample that small can't support parking the committed baseline.
-    val prev4 = Map("a" -> 1.0, "b" -> 2.0, "c" -> 4.0, "d" -> 1.0)
-    val cur4 = Map("a" -> 2.0, "b" -> 4.0, "c" -> 8.0, "d" -> 2.0)
-    assert(Bench.medianFlagshipRatio(cur4, prev4, flags) == 1.0)
-    // TRUE median (r14, r13 ADVICE): even-size overlap averages the
-    // two middle ratios — ratios {1.0, 1.0, 1.1, 1.3, 1.4, 1.5} give
-    // (1.1+1.3)/2 = 1.2, NOT the upper median 1.3: one hot pair of
-    // outliers can no longer tip an otherwise-par session past the
-    // 1.2 gate.
-    val prev6 = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0,
-      "e" -> 1.0, "f" -> 1.0)
-    val cur6 = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.1, "d" -> 1.3,
-      "e" -> 1.4, "f" -> 1.5)
-    assert(math.abs(Bench.medianFlagshipRatio(cur6, prev6, flags) - 1.2)
-      < 1e-12)
-    // Sub-0.3 s baseline rows are excluded: a 10× swing on a 0.1 s
-    // query must not flip the verdict (5 real overlaps remain).
-    val prevTiny = Map("a" -> 0.1, "b" -> 2.0, "c" -> 4.0, "d" -> 1.0,
-      "e" -> 3.0, "f" -> 1.0)
-    val curTiny = Map("a" -> 1.0, "b" -> 2.0, "c" -> 4.0, "d" -> 1.0,
-      "e" -> 3.0, "f" -> 1.0)
-    assert(Bench.medianFlagshipRatio(curTiny, prevTiny, flags) == 1.0)
-  }
-
-  test("promoteIsolated: rejected run leaves committed sidecar byte-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_benchspec")
-    def write(name: String, s: String): Unit =
-      java.nio.file.Files.write(dir.resolve(name), s.getBytes("UTF-8"))
-    def read(name: String): String =
-      new String(java.nio.file.Files.readAllBytes(dir.resolve(name)), "UTF-8")
-    def exists(name: String): Boolean =
-      java.nio.file.Files.exists(dir.resolve(name))
-    try {
-      // No candidate → no-op (fork skipped or crashed pre-stub).
-      write("BENCH_ISOLATED.json", "committed-v1")
-      Bench.promoteIsolated(rejected = false, dir)
-      Bench.promoteIsolated(rejected = true, dir)
-      assert(read("BENCH_ISOLATED.json") == "committed-v1")
-      assert(!exists("BENCH_ISOLATED_REJECTED.json"))
-      // REJECTED: candidate parks in _REJECTED; the committed sidecar
-      // is byte-identical (the r13 clobber wrote an empty stub here).
-      write("BENCH_ISOLATED_CANDIDATE.json", "degraded-session-numbers")
-      Bench.promoteIsolated(rejected = true, dir)
-      assert(read("BENCH_ISOLATED.json") == "committed-v1")
-      assert(read("BENCH_ISOLATED_REJECTED.json")
-        == "degraded-session-numbers")
-      assert(!exists("BENCH_ISOLATED_CANDIDATE.json"))
-      // HEALTHY: candidate is promoted over the committed sidecar.
-      write("BENCH_ISOLATED_CANDIDATE.json", "fresh-healthy-numbers")
-      Bench.promoteIsolated(rejected = false, dir)
-      assert(read("BENCH_ISOLATED.json") == "fresh-healthy-numbers")
-      assert(!exists("BENCH_ISOLATED_CANDIDATE.json"))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(dir).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-      java.nio.file.Files.delete(dir)
-    }
+  test("contract line: failed queries leave queries and value, are listed and counted; locale-proof numbers") {
+    val saved = java.util.Locale.getDefault
+    // de_DE renders "%.3f" as "1,500" — the line must not follow it.
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val l = try Bench.line(
+      Seq("q_a" -> Some(1.5), "q_broken" -> None, "q_b" -> Some(0.25)),
+      "/data/sf0.01", headline = false)
+    finally java.util.Locale.setDefault(saved)
+    assert(l == """{"metric":"total","value":1.750,"unit":"sec",""" +
+      """"n_queries":2,"queries":{"q_a":1.500,"q_b":0.250},""" +
+      """"n_failed":1,"failed":["q_broken"],"sf":"/data/sf0.01"}""")
+    // No failures → no failure fields at all.
+    assert(!Bench.line(Seq("q_a" -> Some(1.0)), "/d", headline = false)
+      .contains("failed"))
   }
 }
