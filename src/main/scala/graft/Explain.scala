@@ -4,26 +4,18 @@ package graft
   * formatted physical plan of each named query (all queries if none
   * named). The review loop for scale work: check PushedFilters reach the
   * parquet scan, small sides broadcast, and WholeStageCodegen spans stay
-  * wide. */
+  * wide. Redirect stdout (`> file`) to keep a full dump. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names =
       if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    val sb = new StringBuilder
     names.foreach { n =>
-      val header = s"\n########## $n ##########"
-      val plan = SparkEntry.queries(n)(spark, sfDir)
+      println(s"\n########## $n ##########")
+      println(SparkEntry.queries(n)(spark, sfDir)
         .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      println(header); println(plan)
-      sb.append(header).append('\n').append(plan).append('\n')
-    }
-    // full dump survives terminal scrollback truncation
-    sys.env.get("SPARK_GRAFT_EXPLAIN_OUT").foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        sb.toString.getBytes("UTF-8"))
+          org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()
   }

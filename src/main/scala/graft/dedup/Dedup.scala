@@ -840,21 +840,38 @@ object Dedup {
     * survives streaming ingest and incremental index maintenance, at the
     * cost of needing `tables` bucket rows per vector instead of one.
     *
-    * Scale shape: one unshuffled bucketing pass (planes broadcast), one
-    * (t, bucket) self-join whose both sides are the SAME exchange
-    * (merge hint → ReusedExchange + spillable sides, exactly
-    * [[minhashPairs]]'s diamond discipline), one pair-dedup aggregate. Quadratic only
-    * within a (table, bucket) cell — WHICH IS WHY `bits` MUST GROW WITH
-    * THE CORPUS: a fixed B gives a fixed 2^B buckets per table, so
-    * per-cell population grows ∝ N and candidate pairs ∝ N² (measured:
-    * 6-bit signatures went 1.7 s → 287 s on a 10× corpus). The default
-    * `bits = 0` auto-sizes B = max(6, ceil(log₂(n / 32))) — buckets
-    * scale with N, expected cell population stays ~32, candidates stay
-    * ~linear. This is the standard LSH prescription (signature length
-    * ∝ log n); per-table recall for a pair at angle θ is (1-θ/π)^B, so
-    * raising B trades recall per table. The default `tables = 0`
-    * auto-sizes T = max(24, [[graft.functions.Knn.tablesFor]](0.9, B,
-    * 0.95)) ([[graft.functions.Knn.autoTables]], r14 — closing the r13
+    * Scale shape: one unshuffled bucketing pass (planes broadcast), then
+    * a NARROW, SALTED (t, bucket) self-join, one pair-dedup aggregate
+    * and an exact-cosine verify — the [[minhashPairs]] plan in vector
+    * space:
+    *
+    *  - NARROW: the bucket join carries (t, bucket, id) only; the deduped
+    *    (id_a, id_b) candidates re-attach vectors by joining back to the
+    *    corpus, so each vector crosses the wire once per verify side
+    *    rather than once per table.
+    *  - SALTED: [[saltedCandidatePairs]] splits a hot cell into
+    *    ⌈s/blockRows⌉ blocks, so a near-identical embedding flood emits
+    *    its pairs across block-pair tasks instead of one sort-merge
+    *    group. Auto-sized cells average ~32 rows, so on healthy corpora
+    *    every cell gets one block and the join is the plain one.
+    *
+    * SCALING.md probe 15 measured this plan at 2.09 s on the sf0.1
+    * fixture and 146 s on the 100× replica corpus, against 2.19 s and
+    * 439 s with vectors riding the bucket join; probe 21 is the
+    * `blockRows` sweep behind the 1024 default.
+    *
+    * Work is quadratic only within a (table, bucket) cell — WHICH IS WHY
+    * `bits` MUST GROW WITH THE CORPUS: a fixed B gives a fixed 2^B
+    * buckets per table, so per-cell population grows ∝ N and candidate
+    * pairs ∝ N² (measured: 6-bit signatures went 1.7 s → 287 s on a 10×
+    * corpus). The default `bits = 0` auto-sizes B = max(6, ceil(log₂(n /
+    * 32))) — buckets scale with N, expected cell population stays ~32,
+    * candidates stay ~linear. This is the standard LSH prescription
+    * (signature length ∝ log n); per-table recall for a pair at angle θ
+    * is (1-θ/π)^B, so raising B trades recall per table. The default
+    * `tables = 0` auto-sizes T = max(24,
+    * [[graft.functions.Knn.tablesFor]](0.9, B, 0.95))
+    * ([[graft.functions.Knn.autoTables]], r14 — closing the r13
     * envelope: the historical fixed T=24 held the near-dup design
     * point, pair recall ≥ 0.95 at cosine 0.9, only through B=13 ≈ 262k
     * vectors; past it the plan silently under-recalled. The analytic
@@ -865,54 +882,13 @@ object Dedup {
     * 24 floor keeps every ≤B=13 result, including the fixture
     * oracles', byte-identical). Size `tables` explicitly with
     * `tablesFor` only when your must-not-miss similarity differs from
-    * the 0.9/0.95 design point. Pass an
-    * explicit `bits > 0` only to pin
+    * the 0.9/0.95 design point. Pass an explicit `bits > 0` only to pin
     * the geometry for a frozen index or an A/B; since r12 the
     * registered gate AND its DuckDB oracle both run the adaptive rule
     * (the oracle derives the same B from count(*), and since r14 the
     * same T from the shared nb CTE), so a pinned call diverges from
     * the oracle once the corpus crosses a growth boundary. */
-  def embeddingLshPairs(corpus: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, dims: Int, tables: Int = 0, bits: Int = 0,
-      cosineFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.cosineNative,
-      dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative): DataFrame = {
-    val b = if (bits > 0) bits
-      else graft.functions.Knn.autoBits(corpus.count())
-    val t = if (tables > 0) tables else graft.functions.Knn.autoTables(b)
-    val bucketed = graft.functions.Knn.lshBucketTable(
-      corpus, idCol, vecCol, t, b, dims, dotFn)
-    bucketed.as("x")
-      .join(bucketed.as("y").hint("merge"), Seq("t", "bucket"))
-      .filter(col("x.vid") < col("y.vid"))
-      // A pair colliding in several tables must verify once: dedup via
-      // the (id_a, id_b) aggregate, vectors riding `first` like
-      // minhashPairs' shingle sets — never a join back to the corpus.
-      .groupBy(col("x.vid").as("id_a"), col("y.vid").as("id_b"))
-      .agg(first(col("x.v")).as("va"), first(col("y.v")).as("vb"))
-      .withColumn("cosine", cosineFn(col("va"), col("vb")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-  }
-
-  /** [[embeddingLshPairs]] re-planned NARROW + SALTED (r10) — the same
-    * two-trade rewrite as [[minhashPairsSalted]], for the vector-space
-    * bucket self-join: the (t, bucket) join carries (t, bucket, id)
-    * only (the wide form ships every vector through the bucket exchange
-    * `tables` times), hot cells parallelize via
-    * [[saltedCandidatePairs]], and the exact-cosine verify re-attaches
-    * vectors by joining the deduped (id_a, id_b) candidates back to the
-    * corpus — each vector crosses the wire once per verify side.
-    * Identical output to [[embeddingLshPairs]] by construction
-    * (spec-pinned): same hyperplanes, same signatures, same candidate
-    * set, same exact-cosine verification — including the r14 auto-T
-    * default (`tables = 0` → [[graft.functions.Knn.autoTables]]).
-    * Auto-sizing keeps average
-    * cells at ~32 rows, so salting engages only on ADVERSARIAL cells
-    * (near-identical embedding floods) — exactly when the wide form
-    * serializes. */
-  def embeddingLshPairsSalted(corpus: DataFrame, idCol: String,
+  def embeddingLshPairs(corpus: DataFrame, idCol: String,
       vecCol: String, threshold: Double, dims: Int,
       tables: Int = 0, bits: Int = 0,
       cosineFn: (Column, Column) => Column =
@@ -1086,107 +1062,6 @@ object Dedup {
     transform(sequence(lit(0), lit(k - 1)),
       seed => array_min(transform(shinglesCol, sh => hashFn(sh, seed))))
 
-  /** LSH candidate pairs from banded MinHash signatures: two docs are
-    * candidates iff some band of r rows hashes identically. With k = b*r,
-    * P(candidate) ≈ 1-(1-J^r)^b. Defaults b=8,r=4: J=0.9 → 0.9995 recall,
-    * while unrelated pairs (J≈0.1) collide at ~8·10⁻⁴ — r must be ≥4 when
-    * the corpus has high baseline similarity (small vocabularies), else
-    * random band collisions swamp verification (measured 218 s → 3 s at
-    * 5k docs going r=2 → r=4). */
-  def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int, bands: Int, rowsPerBand: Int): DataFrame = {
-    val k = bands * rowsPerBand
-    // Signature as k min-aggregates over the exploded shingle table: one
-    // hash-agg shuffle, and each shingle is hashed exactly k times.
-    // (The array-expression form of minhashSignature gets its shingle
-    // input re-inlined per seed by CollapseProject — measured 10× slower.)
-    val sh = shingleTable(df, textCol, idCol, shingleN)
-    val minCols = (0 until k).map(s =>
-      min(xxhash64(col("shingle"), lit(s))).as(s"__m$s"))
-    val sig = sh.groupBy("id").agg(minCols.head, minCols.tail: _*)
-      .select(col("id"),
-        array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
-    val banded = sig.select(col("id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            xxhash64(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)))
-              .as("bh")))).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bh"))
-    // merge hint: keep both sides as identical shuffle exchanges so the
-    // second is a ReusedExchange (see minhashPairs for the full story).
-    banded.as("x").join(banded.as("y").hint("merge"), Seq("band", "bh"))
-      .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-  }
-
-  /** MinHash+LSH near-dup pairs, verified with exact Jaccard — the
-    * standard candidate-then-verify pipeline, collapsed to THREE
-    * shuffles: (1) collect each doc's distinct-shingle set, (2) the
-    * banded self-join on (band, bandHash) — both sides are the same
-    * subtree, so ReuseExchange computes the exchange once, (3) one
-    * pair-dedup aggregate. The shingle sets ride THROUGH the band join,
-    * so verification is a projection (`array_intersect` size — exact,
-    * order-insensitive), never a join back to an exploded shingle
-    * table. Signatures are computed from the materialized set column in
-    * one fused loop (a plain attribute, so CollapseProject cannot
-    * re-inline the shingle computation per seed — the trap the
-    * aggregate formulation in [[minhashCandidates]] avoids). */
-  def minhashPairs(df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int = 3, threshold: Double = 0.8,
-      bands: Int = 8, rowsPerBand: Int = 4,
-      family: MinHashFamily = xxFamily): DataFrame = {
-    val k = bands * rowsPerBand
-    // `prepare` runs on the exploded shingle ROWS, so each shingle is
-    // digested exactly once; the aggregate boundary then pins `bases` as
-    // a real attribute — CollapseProject cannot re-inline the digest
-    // into the per-seed signature lambda (the 10× trap).
-    val sets = shingleTable(df, textCol, idCol, shingleN)
-      .select(col("id"), col("shingle"),
-        family.prepare(col("shingle")).as("base"))
-      .groupBy("id").agg(collect_set(col("shingle")).as("shset"),
-        collect_list(col("base")).as("bases"))
-    // The band's r signature rows join AS the key (array equality) — no
-    // second-level band hash to keep in sync with the oracle.
-    val banded = sets
-      .select(col("id"), col("shset"),
-        minhashSignature(col("bases"), k, family.slot).as("sig"))
-      .select(col("id"), col("shset"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))
-              .as("bh")))).as("bb"))
-      .select(col("id"), col("shset"), col("bb.band"), col("bb.bh"))
-    // merge hint (r9; was shuffle_hash through r8): without a hint AQE
-    // converts this self-join to a broadcast join, which replaces one
-    // side's shuffle with a broadcast exchange and DEFEATS
-    // ReusedExchange — the whole sets-aggregation subtree (shingle
-    // digest + collect_set + signature) runs TWICE (measured: 4
-    // ObjectHashAggregates, 0 ReusedExchange at sf0.1). With identical
-    // shuffle exchanges on both sides the second is a ReusedExchange
-    // and the pipeline runs once. MERGE, not SHUFFLE_HASH (r9): the
-    // join payload is each doc's full shingle SET, and a shuffled-hash
-    // build side cannot spill — at a fixed partition count the build
-    // outgrows the task budget with the corpus (measured: the 100×
-    // probe corpus OOM'd every 8g run in buildHashedRelation; the
-    // sort-merge form spills and completes on the same heap), and a
-    // hot near-identical bucket is a single hash key NO partition
-    // count can split — only a spilling join survives that shape. The
-    // fixture-scale premium is ~1 s on the raw pair queries (1.8 →
-    // 2.9 s isolated at sf0.1), the price of being un-OOM-able. At
-    // 100 TB a broadcast of the banded table is infeasible anyway.
-    banded.as("x").join(banded.as("y").hint("merge"), Seq("band", "bh"))
-      .filter(col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(first(col("x.shset")).as("set_a"), first(col("y.shset")).as("set_b"))
-      .withColumn("shared", size(array_intersect(col("set_a"), col("set_b"))))
-      .withColumn("jaccard",
-        col("shared").cast("double") /
-          (size(col("set_a")) + size(col("set_b")) - col("shared")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
   /** Distinct unordered id pairs sharing a bucket key, with
     * size-adaptive TRIANGLE SALTING (r10, probe 13's fix): a hot bucket
     * of s rows — the planted-boilerplate shape, where every band of
@@ -1236,39 +1111,43 @@ object Dedup {
       .distinct()
   }
 
-  /** [[minhashPairs]] re-planned NARROW + SALTED — the skew-proof form
-    * of the by-contract-quadratic pair list (r10; probe 13 measured the
-    * wide form at 89 s under the planted 2× boilerplate clique, the
-    * entire hot bucket's s²/2 emission serialized in one SMJ task).
-    * Identical output by construction (law spec-pinned in DedupSpec):
-    * same shingle sets, same signatures, same (band, bh) buckets, same
-    * candidate set, same exact-Jaccard verification.
+  /** MinHash+LSH near-dup pairs, verified with exact Jaccard — the
+    * standard candidate-then-verify pipeline. Two docs are candidates
+    * iff some band of r signature slots matches; with k = b·r slots,
+    * P(candidate) ≈ 1-(1-J^r)^b. Defaults b=8, r=4: J=0.9 → 0.9995
+    * recall, while unrelated pairs (J≈0.1) collide at ~8·10⁻⁴ — r must
+    * be ≥4 when the corpus has high baseline similarity (small
+    * vocabularies), else random band collisions swamp verification
+    * (measured 218 s → 3 s at 5k docs going r=2 → r=4).
     *
-    * Two plan changes against [[minhashPairs]], bought together because
-    * each makes the other affordable:
+    * Plan:
     *
-    *  1. NARROW band join: the self-join carries (id, band, bh) only —
-    *     the wide form ships each doc's full shingle set through the
-    *     band exchange once per band (8× the payload bytes written,
-    *     16× read with the ReusedExchange), and sorts it on both SMJ
-    *     sides. Verification instead re-attaches the sets AFTER the
-    *     pair-dedup, joining the (id_a, id_b) candidates back to the
-    *     per-doc set table — the payload crosses the wire once per
-    *     side, and only for docs that are actually candidates.
-    *  2. [[saltedCandidatePairs]] on the narrow rows: a hot bucket's
+    *  1. One aggregate per doc computes the shingle SET (verify payload)
+    *     and the k min-slots (signature) in a single id-shuffle. Its
+    *     partial-aggregate exchange is shared by the banding and both
+    *     verify sides, so the tokenize/shingle/digest scan runs once.
+    *  2. NARROW band join: the self-join carries (id, band, bh) only,
+    *     `bh` being the band's r signature slots joined AS the key
+    *     (array equality — no second-level band hash to keep in sync
+    *     with the oracle).
+    *  3. [[saltedCandidatePairs]] on the narrow rows: a hot bucket's
     *     pair emission parallelizes across ⌈s/blockRows⌉²/2 block-pair
-    *     tasks. Salting the WIDE form would replicate the payload —
-    *     narrow rows make the replication free.
+    *     tasks; buckets of at most `blockRows` rows get one block and
+    *     the plain join. Narrow rows make the salt's replication cheap.
+    *  4. Verify re-attaches the sets AFTER the pair dedup, joining the
+    *     (id_a, id_b) candidates back to the per-doc set table — the
+    *     payload crosses the wire once per side, and only for docs that
+    *     are actually candidates.
     *
-    * One combined aggregate computes the shingle SET (verify payload)
-    * and the k min-slots (signature) in a single id-shuffle; its
-    * partial-aggregate exchange is shared by all three consumers
-    * (banding + both verify sides), so the tokenize/shingle/digest scan
-    * runs once. Costs two extra narrow shuffles (pair dedup + verify
-    * re-attach) against the wide form's three total — the trade wins
-    * whenever payloads dominate bytes (always, at corpus scale) or a
-    * bucket goes hot (the adversarial case this exists for). */
-  def minhashPairsSalted(df: DataFrame, textCol: String, idCol: String,
+    * Why narrow and salted (SCALING.md probe 15): a shingle set riding
+    * the band join crosses the band exchange once per band (8× the
+    * payload bytes) and is sorted on both join sides, and the planted
+    * boilerplate clique serializes its whole s²/2 emission in one
+    * sort-merge task. This plan measured 2.48 s vs 3.17 s on the sf0.1
+    * fixture, 6.51 vs 14.94 s under the skew-2× clique and 10.5 vs
+    * 33.0 s on the 100× replicas; probe 21 is the `blockRows` sweep
+    * behind the 1024 default. */
+  def minhashPairs(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int = 3, threshold: Double = 0.8,
       bands: Int = 8, rowsPerBand: Int = 4,
       family: MinHashFamily = xxFamily,
@@ -1276,7 +1155,8 @@ object Dedup {
     val k = bands * rowsPerBand
     // `prepare` on the exploded shingle ROWS (each shingle digested
     // once); min-agg over rows ≡ array_min over the collected list, so
-    // the signature is bit-identical to minhashPairs' formulation.
+    // the signature equals minhashSignature's and the buckets match
+    // bandedBuckets' (the incremental paths) bucket for bucket.
     val sh = shingleTable(df, textCol, idCol, shingleN)
       .select(col("id"), col("shingle"),
         family.prepare(col("shingle")).as("base"))
@@ -1352,13 +1232,12 @@ object Dedup {
     // reject the out-of-domain value instead (r9 ADVICE).
     require(threshold <= 1.0,
       s"threshold must be <= 1.0 (Jaccard upper bound), got $threshold")
-    // The pairs stage rides the NARROW+SALTED re-plan (r10): identical
-    // pair set by the spec-pinned law, and the representatives' own
-    // near-dup (non-identical boilerplate) hot buckets — the shape the
-    // exact-collapse prestage cannot absorb — parallelize instead of
-    // serializing one sort-merge group.
+    // The representatives' own near-dup (non-identical boilerplate) hot
+    // buckets — the shape the exact-collapse prestage cannot absorb —
+    // are what minhashPairs' salted band join parallelizes (SCALING.md
+    // probe 15, nearskew).
     collapsedClusters(df, textCol, idCol, shingleN, maxIterations)(reps =>
-      minhashPairsSalted(reps, textCol, idCol, shingleN, threshold, bands,
+      minhashPairs(reps, textCol, idCol, shingleN, threshold, bands,
         rowsPerBand, family))
   }
 

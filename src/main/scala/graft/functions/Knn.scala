@@ -57,11 +57,17 @@ object Knn {
     * deterministic stand-in for sampled/trained centroids (k-means training
     * is an offline step out of query scope). */
   def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Int): DataFrame = {
-    val cents = corpus.orderBy(col(idCol)).limit(centroids)
+      centroids: Int): DataFrame =
+    assignWith(corpus, idCol, vecCol,
+      smallestIdCentroids(corpus, idCol, vecCol, centroids))
+
+  /** The deterministic stand-in centroid table of [[ivfAssign]],
+    * [[ivfPq]] and [[ivf]]: the `centroids` smallest-id corpus vectors
+    * as (centroid_id, centv). */
+  private def smallestIdCentroids(corpus: DataFrame, idCol: String,
+      vecCol: String, centroids: Int): DataFrame =
+    corpus.orderBy(col(idCol)).limit(centroids)
       .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    assignWith(corpus, idCol, vecCol, cents)
-  }
 
   /** Bucket assignment against a caller-provided (centroid_id, centv)
     * table — e.g. [[kmeans]]-trained centroids. Same shuffle-free
@@ -320,7 +326,7 @@ object Knn {
   /** THE adaptive LSH signature-width rule — B = max(6, ⌈log₂(n/32)⌉),
     * the single implementation shared by search ([[lshCosine]]) and
     * near-dup pair generation
-    * ([[graft.dedup.Dedup.embeddingLshPairs]]/`Salted`): buckets grow
+    * ([[graft.dedup.Dedup.embeddingLshPairs]]): buckets grow
     * with the corpus so expected cell population stays ~32 and
     * candidate volume stays ~linear (a FIXED B is the measured
     * scale-killer — 2^B buckets per table at every N). Computed by
@@ -593,8 +599,8 @@ object Knn {
       .select(col("vid").as("query_id"), col("v").as("qv"),
         col("t"), col("bucket"))
     // A pair colliding in several tables must score once: dedup via the
-    // (query, neighbor) aggregate, vectors riding `first` like
-    // Dedup.minhashPairs' shingle sets.
+    // (query, neighbor) aggregate, vectors riding `first` — never a
+    // join back to the corpus.
     val cand = cb.join(broadcast(qb), Seq("t", "bucket"))
       .filter(col("query_id") =!= col("vid"))
       .groupBy(col("query_id"), col("vid"))
@@ -793,8 +799,7 @@ object Knn {
       dotFn: (Column, Column) => Column = VectorFunctions.dotNative,
       refine: Int = 0): DataFrame =
     ivfPqWith(corpus, queries, idCol, vecCol, k,
-      corpus.orderBy(col(idCol)).limit(centroids)
-        .select(col(idCol).as("centroid_id"), col(vecCol).as("centv")),
+      smallestIdCentroids(corpus, idCol, vecCol, centroids),
       nprobe, m, codebook, dims, cosineFn, dotFn, refine = refine)
 
   /** [[ivfPq]] against caller-provided centroids (e.g. [[kmeans]]-
@@ -919,22 +924,14 @@ object Knn {
     }
   }
 
-  /** IVF top-k with naive deterministic centroids. */
+  /** IVF top-k with the deterministic smallest-id centroids — the form
+    * `knn_ivf_topk` and its DuckDB oracle replay. Trained centroids go
+    * through [[ivfWith]]. */
   def ivf(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Int, nprobe: Int,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame = {
-    val cents = corpus.orderBy(col(idCol)).limit(centroids)
-      .select(col(idCol).as("centroid_id"), col(vecCol).as("centv"))
-    ivfWith(corpus, queries, idCol, vecCol, k, cents, nprobe, cosineFn)
-  }
-
-  /** IVF top-k with k-means-trained centroids (better-balanced buckets →
-    * better recall at the same nprobe). */
-  def ivfTrained(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, centroids: Int, nprobe: Int,
-      iterations: Int = 3): DataFrame =
+      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame =
     ivfWith(corpus, queries, idCol, vecCol, k,
-      kmeans(corpus, idCol, vecCol, centroids, iterations), nprobe)
+      smallestIdCentroids(corpus, idCol, vecCol, centroids), nprobe, cosineFn)
 
   /** IVF top-k against a provided (centroid_id, centv) table: search only
     * the `nprobe` buckets nearest to each query. Assignment is the
@@ -946,7 +943,7 @@ object Knn {
       cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame = {
     // Pin the (tiny, <=centroids-row) table: it feeds BOTH the
     // assignment fold and the probe broadcast, and an unpinned plan
-    // re-executes whatever produced it per branch — for ivfTrained that
+    // re-executes whatever produced it per branch — for kmeans output that
     // is the ENTIRE k-means iteration chain, corpus scans included.
     val centsPinned = cents.localCheckpoint()
     val assigned = assignBuckets(

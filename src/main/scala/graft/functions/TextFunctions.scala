@@ -11,11 +11,8 @@ import org.apache.spark.sql.functions._
 object TextFunctions {
 
   /** Whitespace tokenization (single-space split matches the fixture's
-    * space-joined corpus; use [[tokensWs]] for arbitrary whitespace). */
+    * space-joined corpus). */
   def tokens(text: Column): Column = split(lower(text), " ")
-
-  /** Regex whitespace split for messy text. */
-  def tokensWs(text: Column): Column = split(lower(text), "\\s+")
 
   def tokenCount(text: Column): Column = size(tokens(text))
 

@@ -556,12 +556,14 @@ object ExtensionQueries extends graft.QueryModule {
     // the md5-prefix hash family so the ENTIRE pipeline — signatures,
     // banding, candidate join, verification — is replayed by the DuckDB
     // oracle; the xxhash64 default stays the production fast path
-    // (recall vs exact pairs asserted in DedupSpec). NARROW+SALTED form
-    // (r10): law-pinned equal to Dedup.minhashPairs, 6× faster on the
-    // planted skew-2× clique and 3× at the 100× corpus (SCALING.md
-    // probe 15), so the oracle SQL is unchanged.
+    // (recall vs exact pairs asserted in DedupSpec). The band join is
+    // narrow and salted, so payloads stay out of the bucket exchange and
+    // a hot bucket's pairs spread over block-pair tasks (SCALING.md
+    // probe 15: 2.3× faster under the planted skew-2× clique, 3× at the
+    // 100× corpus); salting never changes the pair set, so the oracle
+    // replays the plain band join.
     "dedup_minhash_pairs" -> { (s, dir) =>
-      Dedup.minhashPairsSalted(Tables.documents(s, dir), "text", "doc_id",
+      Dedup.minhashPairs(Tables.documents(s, dir), "text", "doc_id",
         family = Dedup.md5AffineFamily)
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -575,7 +577,7 @@ object ExtensionQueries extends graft.QueryModule {
     // this exact path's pair recall vs exact Jaccard is asserted in
     // DedupSpec.
     "dedup_minhash_fast" -> { (s, dir) =>
-      Dedup.minhashPairsSalted(Tables.documents(s, dir), "text", "doc_id")
+      Dedup.minhashPairs(Tables.documents(s, dir), "text", "doc_id")
         .orderBy(col("id_a"), col("id_b"))
     },
 
@@ -659,8 +661,10 @@ object ExtensionQueries extends graft.QueryModule {
     // preserved without freezing the geometry; at every gate scale
     // (sf0.001/0.01/0.1 = 20/200/2000 vectors) the rule yields exactly
     // 6, so the result set is unchanged from the pinned-bits rounds.
-    // NARROW+SALTED form (r10): law-pinned equal to embeddingLshPairs,
-    // 3× faster at the 100× corpus (SCALING.md probe 15).
+    // The bucket join is narrow and salted, as in dedup_minhash_pairs:
+    // vectors re-attach only for candidate pairs and hot cells split
+    // into block-pair tasks (SCALING.md probe 15: 3× faster at the 100×
+    // corpus).
     // tables = 0 = the AUTO-T rule T = max(24, tablesFor(0.9, B, 0.95))
     // (Knn.autoTables, r14 — closing r13 verdict #2: the fixed T=24
     // under-recalled the 0.95/cosine-0.9 design point past B=13 ≈ 262k
@@ -674,7 +678,7 @@ object ExtensionQueries extends graft.QueryModule {
       // interleaved: 2.33 s unspread vs 2.77 s spread — the bucket
       // self-join exchange dominates and the extra spread exchange is
       // pure cost; confirms the r14 measured-and-rejected call).
-      graft.dedup.Dedup.embeddingLshPairsSalted(Tables.embeddings(s, dir),
+      graft.dedup.Dedup.embeddingLshPairs(Tables.embeddings(s, dir),
         "vec_id", "embedding", threshold = 0.4, dims = 64, bits = 0,
         tables = 0)
         .orderBy(col("id_a"), col("id_b"))

@@ -112,27 +112,29 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(recall >= 0.8, s"recall $recall over ${exact.size} true pairs")
   }
 
-  test("minhashPairsSalted == minhashPairs — narrow/salted law, both families") {
-    // The r10 narrow+salted re-plan must be EXACTLY the wide form: same
-    // sets, signatures, buckets, candidates, and exact-Jaccard values.
+  test("minhashPairs forced salting (blockRows = 2) == default — both families") {
+    // At the default blockRows every fixture bucket holds ≤ 1024 rows,
+    // so each gets one block and the band join is the unsalted one;
+    // blockRows = 2 puts every bucket of ≥ 3 rows through the
+    // triangle-block path. Salting must change nothing: same
+    // candidates, same exact-Jaccard values.
     def p(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSet
     val docs = Tables.documents(spark, sf)
-    val wide = p(Dedup.minhashPairs(docs, "text", "doc_id"))
-    assert(wide.nonEmpty)
-    assert(p(Dedup.minhashPairsSalted(docs, "text", "doc_id")) == wide)
-    // Adversarial shape + FORCED salting (blockRows=2 puts every bucket
-    // of ≥3 rows through the triangle-block path, the planted clique
-    // especially) on the oracle-replayable family.
+    val plain = p(Dedup.minhashPairs(docs, "text", "doc_id"))
+    assert(plain.nonEmpty)
+    assert(p(Dedup.minhashPairs(docs, "text", "doc_id", blockRows = 2)) == plain)
+    // Adversarial shape (the planted clique, split into 12 blocks) on
+    // the oracle-replayable family.
     val boiler = "accept all cookies to continue to the site please now"
     val skewed = docs.select($"doc_id", $"text").unionByName(
       (0 until 24).map(i => (5000L + i, boiler)).toDF("doc_id", "text"))
-    val wideS = p(Dedup.minhashPairs(skewed, "text", "doc_id",
+    val plainS = p(Dedup.minhashPairs(skewed, "text", "doc_id",
       family = Dedup.md5AffineFamily))
-    val saltS = p(Dedup.minhashPairsSalted(skewed, "text", "doc_id",
+    val saltS = p(Dedup.minhashPairs(skewed, "text", "doc_id",
       family = Dedup.md5AffineFamily, blockRows = 2))
     // The clique alone contributes 24·23/2 = 276 pairs.
-    assert(wideS.size >= 276 && saltS == wideS)
+    assert(plainS.size >= 276 && saltS == plainS)
   }
 
   test("simhashPairs finds the planted near-dup pair") {
@@ -366,8 +368,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // pairs with a corpus doc or a smaller batch doc — i.e. the
     // incremental path reproduces the all-pairs candidate graph's
     // one-hop rule without ever touching corpus text. Candidate-level
-    // comparison, so use minhashCandidates' contract via pairs at
-    // threshold 0 (every candidate surfaces, no verify cut).
+    // comparison, so read the candidate set via pairs at threshold 0
+    // (every candidate surfaces, no verify cut).
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text", $"source")
     val corpus = docs.filter($"source" === "src0")
     val batch = docs.filter($"source" =!= "src0")
@@ -697,19 +699,21 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(recall >= 0.7, s"recall $recall < 0.7 (${lsh.size}/${exact.size})")
   }
 
-  test("embeddingLshPairsSalted == embeddingLshPairs — narrow/salted law") {
+  test("embeddingLshPairs forced salting (blockRows = 2) == default blockRows") {
     def p(df: org.apache.spark.sql.DataFrame) =
       df.select($"id_a", $"id_b", $"cosine")
         .as[(Long, Long, Double)].collect().toSet
     val emb = graft.model.Tables.embeddings(spark, sf)
-    val wide = p(Dedup.embeddingLshPairs(emb, "vec_id", "embedding",
+    // Default blockRows: every fixture cell holds ≤ 1024 rows, one
+    // block each, so the join is the unsalted one.
+    val plain = p(Dedup.embeddingLshPairs(emb, "vec_id", "embedding",
       threshold = 0.4, dims = 64, bits = 6))
-    assert(wide.nonEmpty)
+    assert(plain.nonEmpty)
     // blockRows = 2 forces the triangle-block path on every cell of ≥3
     // rows — the law must hold with salting fully engaged.
-    val salted = p(Dedup.embeddingLshPairsSalted(emb, "vec_id",
+    val salted = p(Dedup.embeddingLshPairs(emb, "vec_id",
       "embedding", threshold = 0.4, dims = 64, bits = 6, blockRows = 2))
-    assert(salted == wide)
+    assert(salted == plain)
   }
 
   test("saltedCandidatePairs honors a non-default id column (r10 advice)") {
@@ -825,10 +829,6 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val explicit = p(Dedup.embeddingLshPairs(emb, "vec_id", "embedding",
       threshold = 0.4, dims = 64, tables = 24))
     assert(auto == explicit && auto.nonEmpty)
-    // The salted registered form resolves the same budget.
-    val salted = p(Dedup.embeddingLshPairsSalted(emb, "vec_id",
-      "embedding", threshold = 0.4, dims = 64))
-    assert(salted == auto)
   }
 
   test("embeddingLshPairs buckets are data-independent (subset ≡ full corpus)") {

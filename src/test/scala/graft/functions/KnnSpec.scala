@@ -64,7 +64,7 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
   // not guaranteed to beat naive ones (measured 0.85 vs 0.92 once);
   // k-means pays off on genuinely clustered corpora, so this asserts a
   // healthy absolute recall only.
-  test("ivfTrained recall@10 >= 0.7 vs brute force on the fixture embeddings") {
+  test("ivfWith(kmeans) recall@10 >= 0.7 vs brute force on the fixture embeddings") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.filter($"vec_id" < 10)
     val exact = Knn.bruteForce(emb, queries, "vec_id", "embedding", 10)
@@ -72,8 +72,8 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
         .intersect(exact).size.toDouble / exact.size
-    val trained = recallOf(Knn.ivfTrained(emb, queries, "vec_id", "embedding",
-      10, 16, 4, iterations = 3))
+    val trained = recallOf(Knn.ivfWith(emb, queries, "vec_id", "embedding",
+      10, Knn.kmeans(emb, "vec_id", "embedding", 16, 3), 4))
     assert(trained >= 0.7, s"trained recall $trained")
   }
 

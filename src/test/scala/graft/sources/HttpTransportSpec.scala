@@ -14,9 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-/** [[HttpTransport]] against a loopback origin: throttling is retried,
-  * a throttle that outlasts the retries fails reads loudly, and the rate
-  * limit spaces concurrent callers. */
+/** [[HttpTransport]] against a loopback origin: throttling and 5xx
+  * bursts are retried, a throttle or burst that outlasts the retries
+  * fails reads loudly, and the rate limit spaces concurrent callers. */
 class HttpTransportSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
 
   private val hits = new ConcurrentHashMap[String, AtomicInteger]()
@@ -27,8 +27,9 @@ class HttpTransportSpec extends AnyFunSuite with SparkTestBase with BeforeAndAft
   private def base = s"http://127.0.0.1:${server.getAddress.getPort}"
 
   /** `/once429/<delay>`: 429 with `Retry-After: <delay>` on the first hit,
-    * then 200. `/always429/…`: 429 every time. `/missing`: 404. Anything
-    * else: a terminated product page. */
+    * then 200. `/always429/…`: 429 every time. `/burst5xx/<n>/…`: 503 on
+    * the first n hits, then 200. `/missing`: 404. Anything else: a
+    * terminated product page. */
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath
     val n = hits.computeIfAbsent(path, _ => new AtomicInteger(0)).incrementAndGet()
@@ -43,6 +44,8 @@ class HttpTransportSpec extends AnyFunSuite with SparkTestBase with BeforeAndAft
       reply(429, "slow down", Some(path.stripPrefix("/once429/")))
     else if (path.startsWith("/once429/")) reply(200, "ok")
     else if (path.startsWith("/always429/")) reply(429, "slow down", Some("0"))
+    else if (path.startsWith("/burst5xx/"))
+      if (n <= path.split('/')(2).toInt) reply(503, "unavailable") else reply(200, "ok")
     else if (path == "/missing") reply(404, "no")
     else reply(200, """{"data": null}""")
   }
@@ -90,22 +93,43 @@ class HttpTransportSpec extends AnyFunSuite with SparkTestBase with BeforeAndAft
     assert(hitCount("/always429/x") == 3) // maxRetries = 2
   }
 
+  test("a 5xx burst of maxRetries returns the body after maxRetries + 1 hits") {
+    assert(transport().get(s"$base/burst5xx/2/a") == "ok") // maxRetries = 2
+    assert(hitCount("/burst5xx/2/a") == 3)
+  }
+
+  test("a 5xx burst longer than maxRetries fails with an IOException after maxRetries + 1 hits") {
+    val ex = intercept[IOException](transport().get(s"$base/burst5xx/3/b"))
+    assert(ex.getMessage.contains("HTTP 503"))
+    assert(hitCount("/burst5xx/3/b") == 3)
+  }
+
   test("other 4xx still fail fast as client errors") {
     intercept[IllegalStateException](transport().get(s"$base/missing"))
     assert(hitCount("/missing") == 1)
   }
 
-  test("a throttled origin fails the batch read instead of returning fewer rows") {
-    TransportRegistry.put("h429", transport())
+  /** A two-key `graft-rest` batch read over `urlTemplate` fails the job
+    * with a cause whose message names `status`. */
+  private def assertBatchReadFails(name: String, urlTemplate: String, status: String): Unit = {
+    TransportRegistry.put(name, transport())
     val ex = intercept[SparkException] {
       spark.read.format("graft-rest")
         .option("keys", "a,b")
-        .option("urlTemplate", s"$base/always429/batch/{key}/{page}")
-        .option("transport", "h429")
+        .option("urlTemplate", urlTemplate)
+        .option("transport", name)
         .load().collect()
     }
     assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
-      .exists(c => Option(c.getMessage).exists(_.contains("HTTP 429"))), s"cause lost: $ex")
+      .exists(c => Option(c.getMessage).exists(_.contains(status))), s"cause lost: $ex")
+  }
+
+  test("a throttled origin fails the batch read instead of returning fewer rows") {
+    assertBatchReadFails("h429", s"$base/always429/batch/{key}/{page}", "HTTP 429")
+  }
+
+  test("a 5xx burst that outlasts the retries fails the batch read instead of returning fewer rows") {
+    assertBatchReadFails("h5xx", s"$base/burst5xx/9/batch/{key}/{page}", "HTTP 503")
   }
 
   test("a throttled origin fails the streaming read instead of ending the key") {

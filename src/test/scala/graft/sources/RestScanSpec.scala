@@ -138,6 +138,22 @@ class RestScanSpec extends AnyFunSuite with SparkTestBase {
       Option(ex.getCause).exists(_.getMessage.contains("maxPages")))
   }
 
+  test("a malformed JSON page fails the scan with the parse error as its cause") {
+    // Key a's second page is cut off mid-array; key b is healthy. The
+    // whole scan must fail — returning a's first page and all of b
+    // would be a silently short read.
+    val t = new FakeTransport(Map(
+      "u/a/1" -> """{"data": [1]}""", "u/a/2" -> """{"data": [2""",
+      "u/b/1" -> """{"data": [1]}""", "u/b/2" -> """{"data": null}"""))
+    val ex = intercept[org.apache.spark.SparkException] {
+      RestScan.paginated(Seq("a", "b").toDS().coalesce(1),
+        (k, p) => s"u/$k/$p", t, RestScan.productLastPage).collect()
+    }
+    assert(causes(ex).exists(
+      _.isInstanceOf[com.fasterxml.jackson.core.JsonProcessingException]),
+      s"parse error lost: $ex")
+  }
+
   test("rating terminator fires on empty array, not on a populated one") {
     assert(RestScan.ratingLastPage("""{"data": {"ratings": []}}"""))
     assert(!RestScan.ratingLastPage("""{"data": {"ratings": [{"x": 1}]}}"""))

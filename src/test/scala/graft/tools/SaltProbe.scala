@@ -5,21 +5,18 @@ import org.apache.spark.sql.DataFrame
 import graft.dedup.Dedup
 import graft.model.Tables
 
-/** Round-10 probe: the WIDE band self-join ([[Dedup.minhashPairs]] /
-  * [[Dedup.embeddingLshPairs]]) against the NARROW+SALTED re-plan
-  * ([[Dedup.minhashPairsSalted]] / [[Dedup.embeddingLshPairsSalted]]) on
-  * an arbitrary sf-shaped dir — the probe behind the r10 adoption
-  * decision (VERDICT r9 next-round #3/#4): measure on the healthy
-  * fixture, the planted-skew corpora, and the 30×/100× replicas, ship
-  * whichever wins at 100×.
+/** Warmed wall time of the two narrow+salted pair operators,
+  * [[Dedup.minhashPairs]] (`mh`) and [[Dedup.embeddingLshPairs]] (`emb`),
+  * on an sf-shaped dir at a chosen triangle-block size — the probe behind
+  * SCALING.md probe 21's `blockRows` sweep (run it once per corpus and
+  * block size: 256 / 1024 / 4096).
   *
   * Usage: Test/runMain graft.tools.SaltProbe <sfDir> <which> [blockRows]
-  *   which ∈ mh_wide | mh_salted | emb_wide | emb_salted | all
-  *   blockRows (r11, verdict #7): triangle-block size for the salted
-  *   forms — the 256/1024/4096 sensitivity A/B; default 1024 (shipped).
+  *   which ∈ mh | emb | all
+  *   blockRows: triangle-block size passed to both operators; default
+  *   1024 (the operators' default).
   * Warmed protocol matches graft.Bench: run twice, report the second.
-  * One fork per corpus (fresh JVM), dedup_exact-style sacrifice built in
-  * via the warm-up run.
+  * Use one fork (fresh JVM) per corpus.
   */
 object SaltProbe {
   def main(args: Array[String]): Unit = {
@@ -31,21 +28,15 @@ object SaltProbe {
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val forms: Map[String, () => DataFrame] = Map(
-      "mh_wide" -> (() =>
-        Dedup.minhashPairs(Tables.documents(spark, dir), "text", "doc_id")),
-      "mh_salted" -> (() =>
-        Dedup.minhashPairsSalted(Tables.documents(spark, dir), "text",
+      "mh" -> (() =>
+        Dedup.minhashPairs(Tables.documents(spark, dir), "text",
           "doc_id", blockRows = blockRows)),
-      "emb_wide" -> (() =>
-        Dedup.embeddingLshPairs(Tables.embeddings(spark, dir), "vec_id",
-          "embedding", threshold = 0.4, dims = 64)),
-      "emb_salted" -> (() =>
-        Dedup.embeddingLshPairsSalted(Tables.embeddings(spark, dir),
+      "emb" -> (() =>
+        Dedup.embeddingLshPairs(Tables.embeddings(spark, dir),
           "vec_id", "embedding", threshold = 0.4, dims = 64,
           blockRows = blockRows)))
     val names =
-      if (which == "all") Seq("mh_wide", "mh_salted", "emb_wide", "emb_salted")
-      else which.split(",").toSeq
+      if (which == "all") Seq("mh", "emb") else which.split(",").toSeq
     names.foreach { name =>
       val fn = forms.getOrElse(name, sys.error(s"unknown form: $name"))
       noop(fn())
