@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,6 +9,7 @@ import graft.model.Schemas
 import graft.ops.RefOps
 import graft.sink.Upsert
 import graft.sources.{RestScan, Transport}
+import graft.util.Overlap
 
 /** The reference's entire dataflow (SURVEY §3.1) as one lazy Spark
   * program: sitemap → products → shop_info → ratings → staged upserts into
@@ -172,12 +174,19 @@ object SendoPipeline {
 
   // ---- load (SURVEY §2.4 L1-L9, §3.1 steps 5-6) ----
 
-  /** Read a warehouse table, empty with the right schema if absent. */
+  /** Read a warehouse table by its declared `schema` (the contract
+    * [[Schemas]] states), empty with that schema if absent. No schema
+    * inference: a footer-reading job per read would cost more than the
+    * read itself on a small table. Partition columns (such as the ingest
+    * forms' `ingest_batch`) still come from the directory names, after
+    * the declared columns. [[mergeTable]] refuses to publish a table whose
+    * types differ from `schema`, so the files match what this read
+    * expects. */
   def readTable(spark: SparkSession, warehouseDir: String, name: String,
       schema: StructType): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) spark.read.parquet(path.toString)
+    if (fs.exists(path)) spark.read.schema(schema).parquet(path.toString)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
@@ -191,7 +200,13 @@ object SendoPipeline {
     * the path being read would delete its own input on recompute. (On a
     * rename-less object store this swap becomes a metastore/manifest
     * pointer flip; the two-rename window is the same one HDFS table
-    * swaps accept.) */
+    * swaps accept.)
+    *
+    * A merged result whose columns or types differ from `schema` is
+    * rejected before anything is written: [[readTable]] reads by the
+    * declared schema, so such a table would fail the next run's read.
+    * A failed stage write removes its partial stage; the published table
+    * is untouched either way. */
   def mergeTable(spark: SparkSession, warehouseDir: String, name: String,
       schema: StructType, source: DataFrame, pk: String): Unit = {
     val finalPath = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
@@ -208,8 +223,18 @@ object SendoPipeline {
     val target = readTable(spark, warehouseDir, name, schema)
       .select(source.columns.map(col).toIndexedSeq: _*)
     val merged = Upsert.upsert(target, source, Seq(pk))
+    val declared = schema.fields.map(f => f.name -> f.dataType).toMap
+    val drift = merged.schema.fields.collect {
+      case f if !declared.get(f.name).exists(
+          DataTypeUtils.equalsIgnoreNullability(_, f.dataType)) =>
+        s"${f.name}: ${f.dataType.simpleString}"
+    } ++ (schema.fieldNames.toSet -- merged.columns).map(c => s"$c: missing")
+    if (drift.nonEmpty) throw new IllegalArgumentException(
+      s"mergeTable($name): merged columns differ from the declared schema " +
+        s"${schema.simpleString}: ${drift.mkString(", ")}")
     if (fs.exists(stage)) fs.delete(stage, true)
-    merged.write.mode("overwrite").parquet(stage.toString)
+    try merged.write.mode("overwrite").parquet(stage.toString)
+    catch { case e: Throwable => fs.delete(stage, true); throw e }
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(finalPath) && !fs.rename(finalPath, old))
       throw new java.io.IOException(s"mergeTable: could not move $finalPath aside")
@@ -218,28 +243,50 @@ object SendoPipeline {
     fs.delete(old, true)
   }
 
-  /** The full DAG (etl.py:329-343). Returns the three final tables. */
+  /** The full DAG (etl.py:308-343). Returns the three final tables.
+    *
+    * As in the reference, where LocalExecutor runs independent Airflow
+    * tasks at the same time, the load is two branches that run together
+    * ([[Overlap.writeBoth]]): the shop branch (D3, etl.py:206-281:
+    * `shop_info` MERGE → S8 read-back → RI-filtered `product_detail`
+    * MERGE) and the rating branch (D2, etl.py:170-203: `ratings` →
+    * `rating` MERGE). Each fills the cores the other leaves idle while it
+    * waits on the origin or on a write. Each MERGE publishes atomically
+    * and is idempotent, so when one branch fails the other still lands,
+    * nothing is left half-written, and a replay converges; `run`
+    * rethrows once both are done (the shop branch's failure first).
+    *
+    * Both branches start from all of `shops` (a cached scan is
+    * materialized whole before anything reads it), so it is built before
+    * they fork, by this thread alone, which costs no overlap. Two threads
+    * building stacked caches at once can deadlock in Spark when one
+    * build fails: the failed build clears the caches over it, whose
+    * builder lock the other thread holds while it waits for this one.
+    * `rats` is pinned because its MERGE reads it twice (anti-join keys,
+    * then the union); unpinned, every rating page would be fetched
+    * twice. */
   def run(spark: SparkSession, transport: Transport,
       warehouseDir: String): Map[String, DataFrame] = {
     val subCats = subCategories(spark, transport)
     val prods = products(spark, subCats, transport).persist()   // 2 consumers
     val shops = shopInfos(spark, prods, transport).persist()    // 2 consumers
-    val rats = ratings(spark, shops, transport)
-
-    // Rating load (etl.py:170-203). The reference's 5-way fan-out (D2/U5)
-    // is subsumed by partition parallelism inside one merge.
-    mergeTable(spark, warehouseDir, "rating", Schemas.rating, rats, "rating_id")
-
-    // Shop load, then RI-filtered product load (etl.py:206-281):
-    mergeTable(spark, warehouseDir, "shop_info", Schemas.shopInfo, shops, "shop_id")
-    val dbShopIds = readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo)
-      .select("shop_id") // S8 read-back
-    val validShops = RefOps.distinctKeys("shop_id")(dbShopIds, shops) // U4
-    val rifProducts = RefOps.riFilter(validShops, "shop_id")(prods)   // P9
-    mergeTable(spark, warehouseDir, "product_detail", Schemas.productDetail,
-      rifProducts, "product_id")
-
-    prods.unpersist(); shops.unpersist()
+    val rats = ratings(spark, shops, transport).persist()       // read twice
+    try {
+      shops.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+      Overlap.writeBoth(
+        {
+          mergeTable(spark, warehouseDir, "shop_info", Schemas.shopInfo, shops, "shop_id")
+          val dbShopIds = readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo)
+            .select("shop_id") // S8 read-back
+          val validShops = RefOps.distinctKeys("shop_id")(dbShopIds, shops) // U4
+          val rifProducts = RefOps.riFilter(validShops, "shop_id")(prods)   // P9
+          mergeTable(spark, warehouseDir, "product_detail", Schemas.productDetail,
+            rifProducts, "product_id")
+        },
+        // The reference's 5-way rating fan-out (D2/U5) is subsumed by
+        // partition parallelism inside one merge.
+        mergeTable(spark, warehouseDir, "rating", Schemas.rating, rats, "rating_id"))
+    } finally { prods.unpersist(); shops.unpersist(); rats.unpersist() }
     Map(
       "shop_info" -> readTable(spark, warehouseDir, "shop_info", Schemas.shopInfo),
       "product_detail" -> readTable(spark, warehouseDir, "product_detail", Schemas.productDetail),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.dedup.Dedup
 import graft.pipeline.SendoPipeline
+import graft.util.Overlap.writeBoth
 
 /** Streaming corpus ingestion: readStream → per-micro-batch incremental
   * dedup → staged MERGE into the parquet warehouse, via foreachBatch —
@@ -26,34 +27,15 @@ import graft.pipeline.SendoPipeline
   *      the corpus is never rescanned),
   *   2. MERGE survivors into the docs table by PK,
   *   3. MERGE the survivors' fingerprints into the index table.
+  *
+  * The append forms write survivors and index at the same time
+  * ([[graft.util.Overlap.writeBoth]]): the two writes target disjoint
+  * paths, both are idempotent partition overwrites, and the
+  * docs-written/index-crashed partial failure reconverges on replay
+  * (the index probe excludes the batch's own partition, [[readIndex]]),
+  * so ordering between them was never load-bearing.
   */
 object StreamingIngest {
-
-  /** Overlap a batch's two INDEPENDENT output writes (survivors +
-    * index) on two driver threads — guide §2.6 "overlap independent
-    * jobs": the writes target disjoint paths, both are idempotent
-    * partition overwrites, and the gates' documented partial-failure
-    * story (docs-written/index-crashed reconverges on replay) already
-    * covers every interleaving, so ordering between them was never
-    * load-bearing. The second job's tasks back-fill executor slots the
-    * first job's tail leaves idle.
-    *
-    * `a` runs on the calling thread, `b` on a thread this call creates:
-    * a fresh thread inherits the caller's Spark local properties (job
-    * group, scheduler pool, SQL execution id) as they are NOW, which a
-    * pooled thread reused across calls does not, and no shared pool
-    * thread sits blocked for a whole Spark job. Both are joined before
-    * either failure is rethrown (`a`'s first), so a failed docs write
-    * never leaves the index write running against a torn table. */
-  private[streaming] def writeBoth(a: => Unit, b: => Unit): Unit = {
-    var failedB: Throwable = null
-    val t = new Thread(() => try b catch { case e: Throwable => failedB = e },
-      "graft-ingest-write")
-    t.setDaemon(true)
-    t.start()
-    try a finally t.join()
-    if (failedB != null) throw failedB
-  }
 
   private val fpSchema = StructType(Seq(StructField("fp", StringType)))
 
@@ -115,8 +97,11 @@ object StreamingIngest {
     * "identical self-overwrite" would LOSE the partition's other docs.
     * Excluding the batch's own partition makes the replay compute the
     * exact original survivor set — true at-least-once idempotence, and
-    * a docs-written/index-crashed partial failure also reconverges. */
-  private def readIndex(spark: org.apache.spark.sql.SparkSession,
+    * a docs-written/index-crashed partial failure also reconverges.
+    * Read by its declared `schema` ([[SendoPipeline.readTable]]), so no
+    * footer-reading job runs per micro-batch; the `ingest_batch`
+    * partition column still comes from the directory names. */
+  private[streaming] def readIndex(spark: org.apache.spark.sql.SparkSession,
       warehouseDir: String, name: String,
       schema: StructType, excludeBatch: Option[Long]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -197,7 +182,7 @@ object StreamingIngest {
 
   private def bandIndexTable(table: String): String = s"${table}_bandidx"
 
-  private val bandIdxSchema = StructType(Seq(
+  private[streaming] val bandIdxSchema = StructType(Seq(
     StructField("band", org.apache.spark.sql.types.IntegerType),
     StructField("bh", org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.LongType))))

@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import graft.sources.FakeTransport
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import graft.sources.{FakeTransport, Transport}
 
 /** In-memory fixture world shaped exactly like the four sendo endpoints
   * (FIXTURES.md §2), with the documented edge cases: multi-page scans,
@@ -87,4 +90,51 @@ object SendoFixtures {
 
   def transport(r1Comment: String = "Tốt"): FakeTransport =
     new FakeTransport(pages(r1Comment))
+
+  /** The next day of the same world: shop 502 renamed, product 2001
+    * repriced, rating r1 re-commented — one change per table. */
+  def day2Pages: Map[String, String] = pages(r1Comment = "Tuyệt vời") ++ Map(
+    SendoPipeline.detailUrl("ao-so-mi-1002") -> shopInfo("502", "Shop Áo Mới"),
+    SendoPipeline.productUrl("ao-nu", 1) ->
+      s"""{"data": [${product("2001", "Áo nữ", "ao-nu-2001.html", "503", 85000)}, $p1001]}""")
+
+  def day2Transport(): FakeTransport = new FakeTransport(day2Pages)
+
+  /** Day 2 with a drifted product payload: p1003's `price` arrives as
+    * a non-numeric string, which no declared decimal can hold. */
+  def driftedPriceTransport(): FakeTransport = {
+    val p1003Drifted = p1003.replace("\"price\": 150000", "\"price\": \"liên hệ\"")
+    require(p1003Drifted != p1003)
+    new FakeTransport(day2Pages ++ Map(
+      SendoPipeline.productUrl("dam-nu", 2) -> s"""{"data": [$p1003Drifted]}"""))
+  }
+}
+
+/** Per-URL request counts, held in a process-wide map: in local mode the
+  * executor threads share the driver JVM, while each task holds its own
+  * deserialized copy of the transport. `tag` keeps runs apart. */
+object RequestLog {
+  private val hits = new ConcurrentHashMap[(String, String), AtomicLong]()
+
+  def hit(tag: String, url: String): Unit =
+    hits.computeIfAbsent((tag, url), _ => new AtomicLong).incrementAndGet()
+
+  def counts(tag: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    hits.asScala.collect { case ((t, url), n) if t == tag => url -> n.get }.toMap
+  }
+}
+
+/** Records every request in [[RequestLog]] under `tag`, then answers
+  * from `inner`. */
+final class CountingTransport(tag: String, inner: Transport) extends Transport {
+  override def get(url: String): String = { RequestLog.hit(tag, url); inner.get(url) }
+}
+
+/** An origin whose `host` is down: every request to it throws. */
+final class HostDownTransport(host: String, inner: Transport) extends Transport {
+  override def get(url: String): String =
+    if (java.net.URI.create(url).getHost == host)
+      throw new IllegalStateException(s"$host is down: $url")
+    else inner.get(url)
 }

@@ -1,9 +1,21 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.model.Schemas
+import graft.ops.RefOps
+import graft.sources.Transport
 
 class SendoPipelineSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -83,5 +95,160 @@ class SendoPipelineSpec extends AnyFunSuite with SparkTestBase {
     val changedKeys = ratingsAfter.collect().toSet.diff(before)
       .map(_.getAs[String]("rating_id"))
     assert(changedKeys == Set("r1"))
+  }
+
+  private val tableSchemas: Map[String, StructType] = Map(
+    "shop_info" -> Schemas.shopInfo,
+    "product_detail" -> Schemas.productDetail,
+    "rating" -> Schemas.rating)
+
+  private def tables(wh: String): Map[String, Set[Row]] = tableSchemas.map {
+    case (t, schema) =>
+      t -> SendoPipeline.readTable(spark, wh, t, schema).collect().toSet
+  }
+
+  /** Every file under `dir` (hidden stage/backup directories included),
+    * by relative path, with its bytes. */
+  private def filesOf(dir: String): Map[String, Vector[Byte]] = {
+    val root = Paths.get(dir)
+    val all = Files.walk(root)
+    try all.iterator().asScala.filter(Files.isRegularFile(_)).map { (f: Path) =>
+      root.relativize(f).toString -> Files.readAllBytes(f).toVector
+    }.toMap
+    finally all.close()
+  }
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  /** `run`'s stages called one by one, each extract pinned and
+    * materialized before the next, in the order `run` used before its two
+    * load branches overlapped. */
+  private def sequential(t: Transport, wh: String): Unit = {
+    def pinned(df: DataFrame): DataFrame = { df.persist().count(); df }
+    val subCats = SendoPipeline.subCategories(spark, t)
+    val prods = pinned(SendoPipeline.products(spark, subCats, t))
+    val shops = pinned(SendoPipeline.shopInfos(spark, prods, t))
+    val rats = pinned(SendoPipeline.ratings(spark, shops, t))
+    SendoPipeline.mergeTable(spark, wh, "rating", Schemas.rating, rats, "rating_id")
+    SendoPipeline.mergeTable(spark, wh, "shop_info", Schemas.shopInfo, shops, "shop_id")
+    val db = SendoPipeline.readTable(spark, wh, "shop_info", Schemas.shopInfo)
+      .select("shop_id")
+    SendoPipeline.mergeTable(spark, wh, "product_detail", Schemas.productDetail,
+      RefOps.riFilter(RefOps.distinctKeys("shop_id")(db, shops), "shop_id")(prods),
+      "product_id")
+    prods.unpersist(); shops.unpersist(); rats.unpersist()
+  }
+
+  test("the two load branches share the persisted extract: every URL is " +
+      "fetched as often as by the stages run one by one") {
+    val (tagRun, tagSeq) = (UUID.randomUUID().toString, UUID.randomUUID().toString)
+    val (whRun, whSeq) = (freshDir(), freshDir())
+    SendoPipeline.run(spark, new CountingTransport(tagRun, SendoFixtures.transport()), whRun)
+    sequential(new CountingTransport(tagSeq, SendoFixtures.transport()), whSeq)
+    val got = RequestLog.counts(tagRun)
+    assert(got == RequestLog.counts(tagSeq))
+    // Every fixture URL exactly once, except shop 501's rating pages:
+    // two detail pages answer with shop 501, so the extract holds it
+    // twice and its rating scan runs once per row, as in the reference.
+    val perShopRow = (1 to 3).map(SendoPipeline.ratingUrl("501", _)).toSet
+    assert(got == SendoFixtures.pages().keySet
+      .map(u => u -> (if (perShopRow(u)) 2L else 1L)).toMap)
+    assert(tables(whRun) == tables(whSeq))
+  }
+
+  test("a failed rating branch still lands shop_info and product_detail, " +
+      "leaves rating as it was, and a replay converges") {
+    val want = freshDir()
+    SendoPipeline.run(spark, SendoFixtures.transport(), want)
+    val day1 = tables(want)
+    SendoPipeline.run(spark, SendoFixtures.day2Transport(), want)
+    val day2 = tables(want)
+    tableSchemas.keys.foreach(t => assert(day2(t) != day1(t), s"day 2 must change $t"))
+
+    val wh = freshDir()
+    SendoPipeline.run(spark, SendoFixtures.transport(), wh)
+    val ratingFiles = filesOf(s"$wh/rating")
+    val ex = intercept[Exception] {
+      SendoPipeline.run(spark,
+        new HostDownTransport("shop-home.sendo.vn", SendoFixtures.day2Transport()), wh)
+    }
+    assert(causes(ex).exists(c => Option(c.getMessage)
+      .exists(_.contains("shop-home.sendo.vn is down"))), s"cause lost: $ex")
+    val got = tables(wh)
+    assert(got("shop_info") == day2("shop_info"))
+    assert(got("product_detail") == day2("product_detail"))
+    assert(filesOf(s"$wh/rating") == ratingFiles)
+    assert(new java.io.File(wh).list().toSet == tableSchemas.keySet,
+      "no stage or backup directory may be left behind")
+    // The replay with the origin healthy again equals one clean day 2.
+    SendoPipeline.run(spark, SendoFixtures.day2Transport(), wh)
+    assert(tables(wh) == day2)
+  }
+
+  test("a product page whose price is not a number fails the run before " +
+      "either branch writes, and leaves all three tables unchanged (REST schema drift)") {
+    val wh = freshDir()
+    SendoPipeline.run(spark, SendoFixtures.transport(), wh)
+    val before = filesOf(wh)
+    val ex = intercept[Exception] {
+      SendoPipeline.run(spark, SendoFixtures.driftedPriceTransport(), wh)
+    }
+    assert(causes(ex).exists(c => Option(c.getMessage)
+      .exists(_.contains("FAILFAST"))), s"not a parse failure: $ex")
+    assert(filesOf(wh) == before)
+  }
+
+  /** Jobs started on this thread while `body` runs, `body`'s result
+    * included. Listener events arrive in order on one queue, so once a
+    * sentinel job's start is seen, every earlier job's start was too. */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (group, sentinel) = (UUID.randomUUID().toString, UUID.randomUUID().toString)
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "sentinel job never reached the listener")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readTable reads an existing table by its declared schema and starts no job") {
+    val wh = freshDir()
+    SendoPipeline.run(spark, SendoFixtures.transport(), wh)
+    val ((fields, columns), jobs) = jobsStartedBy {
+      val df = SendoPipeline.readTable(spark, wh, "rating", Schemas.rating)
+      (df.schema.fields.map(f => f.name -> f.dataType).toSeq, df.columns.toSeq)
+    }
+    assert(jobs == 0, s"$jobs job(s) started to read a table of declared schema")
+    assert(fields == Schemas.rating.fields.map(f => f.name -> f.dataType).toSeq)
+    assert(columns == Schemas.ratingColumns)
+  }
+
+  test("mergeTable rejects a merged result whose types differ from the " +
+      "declared schema before writing anything") {
+    val wh = freshDir()
+    SendoPipeline.run(spark, SendoFixtures.transport(), wh)
+    val before = filesOf(wh)
+    val drifted = SendoPipeline
+      .readTable(spark, wh, "product_detail", Schemas.productDetail)
+      .withColumn("price", col("price").cast("double"))
+    val ex = intercept[IllegalArgumentException] {
+      SendoPipeline.mergeTable(spark, wh, "product_detail", Schemas.productDetail,
+        drifted, "product_id")
+    }
+    assert(ex.getMessage.contains("price: double"), ex.getMessage)
+    assert(filesOf(wh) == before)
   }
 }

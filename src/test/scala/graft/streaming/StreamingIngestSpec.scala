@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -209,44 +211,54 @@ class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(ids == Set(1L, 4L))
   }
 
-  test("writeBoth: a failing `a` still lets `b` finish its write, then " +
-      "surfaces `a`'s error") {
-    val out = tmpDir("writeboth_b") + "/t"
-    val e = intercept[IllegalStateException] {
-      StreamingIngest.writeBoth(throw new IllegalStateException("a failed"),
-        spark.range(1000).write.parquet(out))
-    }
-    assert(e.getMessage == "a failed")
-    assert(spark.read.parquet(out).count() == 1000L)
-    // Both fail: `a`'s error is the one rethrown.
-    val both = intercept[IllegalStateException] {
-      StreamingIngest.writeBoth(throw new IllegalStateException("a"),
-        throw new IllegalStateException("b"))
-    }
-    assert(both.getMessage == "a")
+  test("readIndex over a two-partition band index keeps ingest_batch and " +
+      "drops the excluded batch") {
+    val wh = tmpDir("readidx")
+    StreamingIngest.ingestBatchNearDup(Seq((1L, longA)).toDF("doc_id", "text"),
+      wh, "docs", "text", "doc_id", batchId = 0L)
+    StreamingIngest.ingestBatchNearDup(Seq((2L, longB)).toDF("doc_id", "text"),
+      wh, "docs", "text", "doc_id", batchId = 1L)
+    def read(exclude: Option[Long]) = StreamingIngest.readIndex(spark, wh,
+      "docs_bandidx", StreamingIngest.bandIdxSchema, exclude)
+    val idx = read(Some(1L))
+    assert(idx.columns.toSeq == Seq("band", "bh", "ingest_batch"))
+    assert(idx.select($"ingest_batch".cast("long")).as[Long].collect().toSet == Set(0L))
+    assert(idx.count() == 8L) // 8 bands x 1 doc
+    assert(read(None).count() == 16L)
   }
 
-  test("writeBoth: a failing `b` still lets `a` finish its write, then " +
-      "surfaces `b`'s error") {
-    val out = tmpDir("writeboth_a") + "/t"
-    val e = intercept[IllegalStateException] {
-      StreamingIngest.writeBoth(spark.range(1000).write.parquet(out),
-        throw new IllegalStateException("b failed"))
-    }
-    assert(e.getMessage == "b failed")
-    assert(spark.read.parquet(out).count() == 1000L)
-  }
+  test("near-dup ingest: a failed band-index write still lands the " +
+      "survivors, and replaying the batch converges to an uninterrupted run") {
+    val b0 = Seq((1L, longA), (2L, longA), (3L, null)).toDF("doc_id", "text")
+    val b1 = Seq((4L, longA), (5L, longB)).toDF("doc_id", "text")
+    def ingest(b: org.apache.spark.sql.DataFrame, wh: String, id: Long): Unit =
+      StreamingIngest.ingestBatchNearDup(b, wh, "docs", "text", "doc_id", batchId = id)
+    def docsOf(wh: String) = spark.read.parquet(s"$wh/docs")
+      .select("doc_id", "text", "ingest_batch").collect().toSet
+    def idxOf(wh: String) = spark.read.parquet(s"$wh/docs_bandidx")
+      .select("band", "bh", "ingest_batch").collect().toSet
+    val want = tmpDir("ndp_want")
+    ingest(b0, want, 0L)
+    val wantB0 = docsOf(want)
+    ingest(b1, want, 1L)
 
-  test("writeBoth: `b` sees the caller's current Spark local properties") {
-    val sc = spark.sparkContext
-    val key = "graft.test.writeBoth"
-    // Two calls with different values: a thread reused across calls
-    // would carry the first call's (or no) value into the second.
-    try Seq("first", "second").foreach { v =>
-      sc.setLocalProperty(key, v)
-      var seen: String = null
-      StreamingIngest.writeBoth((), { seen = sc.getLocalProperty(key) })
-      assert(seen == v)
-    } finally sc.setLocalProperty(key, null)
+    // A one-file parquet table with the band index's columns and no rows,
+    // where the index's directory must go: the index probe reads it as an
+    // empty index, the band-index write cannot create its partition under
+    // a file.
+    val empty = tmpDir("ndp_empty") + "/t"
+    Seq.empty[(Int, Seq[Long])].toDF("band", "bh").coalesce(1).write.parquet(empty)
+    val part = Files.list(Paths.get(empty)).iterator().asScala
+      .find(_.toString.endsWith(".parquet")).get
+    val wh = tmpDir("ndp_obstructed")
+    val obstruction = Paths.get(wh, "docs_bandidx")
+    Files.copy(part, obstruction)
+    intercept[Exception](ingest(b0, wh, 0L))
+    assert(docsOf(wh) == wantB0, "the survivors write must still land")
+    Files.delete(obstruction)
+    ingest(b0, wh, 0L)
+    ingest(b1, wh, 1L)
+    assert(docsOf(wh) == docsOf(want))
+    assert(idxOf(wh) == idxOf(want))
   }
 }
