@@ -83,11 +83,9 @@ object Dedup {
 
   /** (id, band, bh) banded MinHash buckets of every shingled doc — the
     * shared candidate-key space of [[minhashPairs]], [[minhashBandIndex]]
-    * and [[incrementalMinhashDedup]]. `bh` is the band's r-row signature
-    * slice joined AS the key (array equality), exactly as in
-    * [[minhashPairs]], so the incremental path and the all-pairs path
-    * agree bucket-for-bucket. Docs with no shingles (null text, or fewer
-    * than `shingleN` tokens) produce no rows. */
+    * and [[incrementalMinhashDedup]], banded by [[bandKeys]] as in
+    * [[minhashPairs]]. Docs with no shingles (null text, or fewer than
+    * `shingleN` tokens) produce no rows. */
   private def bandedBuckets(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int, bands: Int, rowsPerBand: Int,
       family: MinHashFamily): DataFrame = {
@@ -95,15 +93,24 @@ object Dedup {
     val sets = shingleTable(df, textCol, idCol, shingleN)
       .select(col("id"), family.prepare(col("shingle")).as("base"))
       .groupBy("id").agg(collect_list(col("base")).as("bases"))
-    sets
-      .select(col("id"), minhashSignature(col("bases"), k, family.slot).as("sig"))
+    bandKeys(sets
+      .select(col("id"), minhashSignature(col("bases"), k, family.slot).as("sig")),
+      bands, rowsPerBand)
+  }
+
+  /** (id, band, bh) rows of an (id, sig) table: band b's key `bh` is
+    * the r-slot slice of `sig` joined AS the key (array equality). The
+    * one band-key expression of the incremental and all-pairs paths, so
+    * they agree bucket for bucket. */
+  private def bandKeys(sigs: DataFrame, bands: Int,
+      rowsPerBand: Int): DataFrame =
+    sigs
       .select(col("id"),
         explode(transform(sequence(lit(0), lit(bands - 1)),
           b => struct(b.as("band"),
             slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))
               .as("bh")))).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bh"))
-  }
 
   /** The persisted LSH band-bucket index of a corpus — the NEAR-dup
     * analogue of [[fingerprintIndex]]: distinct (band, bh) bucket keys,
@@ -161,30 +168,35 @@ object Dedup {
   def incrementalMinhashDedupWithIndex(batch: DataFrame,
       bandIndex: DataFrame, textCol: String, idCol: String,
       shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-      family: MinHashFamily = xxFamily): (DataFrame, DataFrame) = {
-    // Four plan branches consume the banded buckets (the index probe,
-    // both sides of the internal min-id window, the survivor-key
-    // anti-join); pin them so the shingle-digest + signature pipeline
-    // runs over the batch once, not per branch — the same diamond
-    // semanticDedupAssigned pins. O(batch) rows by construction, so the
-    // pin is batch-sized at any corpus size.
-    val banded = bandedBuckets(batch, textCol, idCol, shingleN, bands,
-      rowsPerBand, family).localCheckpoint()
+      family: MinHashFamily = xxFamily): (DataFrame, DataFrame) =
+    bucketDedup(batch, bandedBuckets(batch, textCol, idCol, shingleN, bands,
+      rowsPerBand, family), bandIndex, idCol, Seq("band", "bh"))
+
+  /** The one-hop min-id bucket rule of both incremental near-dup paths,
+    * keyed by (band, bh) or (t, bucket): a batch row is dropped iff one of
+    * its `buckets` rows (id + `key`) hits a key `index` holds or shares a
+    * key with a smaller-id batch row. Returns (survivors, their distinct
+    * keys). Four plan branches read the buckets, so they are pinned and
+    * the signature pipeline runs over the batch once — a batch-sized pin
+    * at any corpus size (the diamond semanticDedupAssigned pins). */
+  private def bucketDedup(batch: DataFrame, buckets: DataFrame,
+      index: DataFrame, idCol: String,
+      key: Seq[String]): (DataFrame, DataFrame) = {
+    val banded = buckets.localCheckpoint()
     val idxHits = banded
-      .join(bandIndex.select(col("band"), col("bh")), Seq("band", "bh"),
-        "left_semi")
+      .join(index.select(key.map(col): _*), key, "left_semi")
       .select(col("id"))
     val internal = banded
       .withColumn("__minid",
-        min(col("id")).over(Window.partitionBy(col("band"), col("bh"))))
+        min(col("id")).over(Window.partitionBy(key.map(col): _*)))
       .filter(col("id") > col("__minid"))
       .select(col("id"))
     val dropped = idxHits.union(internal).distinct()
     val kept = batch.join(dropped.withColumnRenamed("id", idCol),
       Seq(idCol), "left_anti")
-    val keptBuckets = banded.join(dropped, Seq("id"), "left_anti")
-      .select(col("band"), col("bh")).distinct()
-    (kept, keptBuckets)
+    val keptKeys = banded.join(dropped, Seq("id"), "left_anti")
+      .select(key.map(col): _*).distinct()
+    (kept, keptKeys)
   }
 
   /** (id, shingle) exploded distinct-shingle table — the join key space
@@ -968,29 +980,11 @@ object Dedup {
       lshIndex: DataFrame, idCol: String, vecCol: String, dims: Int,
       tables: Int = 8, bits: Int = 12,
       dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative): (DataFrame, DataFrame) = {
-    // Same multi-consumer diamond as incrementalMinhashDedupWithIndex:
-    // pin the O(batch·tables) bucket table so the signing pass runs once.
-    val banded = graft.functions.Knn.lshBucketTable(batch, idCol, vecCol,
-      tables, bits, dims, dotFn)
-      .select(col("vid").as("id"), col("t"), col("bucket"))
-      .localCheckpoint()
-    val idxHits = banded
-      .join(lshIndex.select(col("t"), col("bucket")), Seq("t", "bucket"),
-        "left_semi")
-      .select(col("id"))
-    val internal = banded
-      .withColumn("__minid",
-        min(col("id")).over(Window.partitionBy(col("t"), col("bucket"))))
-      .filter(col("id") > col("__minid"))
-      .select(col("id"))
-    val dropped = idxHits.union(internal).distinct()
-    val kept = batch.join(dropped.withColumnRenamed("id", idCol),
-      Seq(idCol), "left_anti")
-    val keptKeys = banded.join(dropped, Seq("id"), "left_anti")
-      .select(col("t"), col("bucket")).distinct()
-    (kept, keptKeys)
-  }
+        graft.functions.VectorFunctions.dotNative): (DataFrame, DataFrame) =
+    bucketDedup(batch, graft.functions.Knn.lshBucketTable(batch, idCol,
+        vecCol, tables, bits, dims, dotFn)
+      .select(col("vid").as("id"), col("t"), col("bucket")),
+      lshIndex, idCol, Seq("t", "bucket"))
 
   /** STREAMING exact dedup: drop any document whose normalized-text
     * fingerprint was already emitted, with state bounded by the event-time
@@ -1155,8 +1149,7 @@ object Dedup {
     val k = bands * rowsPerBand
     // `prepare` on the exploded shingle ROWS (each shingle digested
     // once); min-agg over rows ≡ array_min over the collected list, so
-    // the signature equals minhashSignature's and the buckets match
-    // bandedBuckets' (the incremental paths) bucket for bucket.
+    // the signature equals minhashSignature's (the incremental paths').
     val sh = shingleTable(df, textCol, idCol, shingleN)
       .select(col("id"), col("shingle"),
         family.prepare(col("shingle")).as("base"))
@@ -1164,15 +1157,10 @@ object Dedup {
       min(family.slot(col("base"), lit(s))).as(s"__m$s"))
     val agg = sh.groupBy("id")
       .agg(collect_set(col("shingle")).as("shset"), minCols: _*)
-    val banded = agg
+    val banded = bandKeys(agg
       .select(col("id"),
-        array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
-      .select(col("id"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))
-              .as("bh")))).as("bb"))
-      .select(col("id"), col("bb.band"), col("bb.bh"))
+        array((0 until k).map(i => col(s"__m$i")): _*).as("sig")),
+      bands, rowsPerBand)
     val cand = saltedCandidatePairs(banded, Seq("band", "bh"), blockRows)
     val sets = agg.select(col("id"), col("shset"))
     cand

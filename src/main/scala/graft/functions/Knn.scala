@@ -31,12 +31,18 @@ object Knn {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", cosineFn(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topPerQuery(scored, "cosine", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cosine", "rk")
   }
+
+  /** The per-query top-n of every search here: each `query_id`'s rows
+    * ranked by `score` descending, ties to the smaller `tie`, ranks 1..n
+    * kept as `rk` — the window shape the top-k plan rewrite recognizes. */
+  private def topPerQuery(scored: DataFrame, score: String, tie: String,
+      n: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(Window
+        .partitionBy(col("query_id")).orderBy(col(score).desc, col(tie))))
+      .filter(col("rk") <= n)
 
   /** Exact all-pairs embedding near-dup detection: every unordered pair
     * with cosine ≥ threshold. Quadratic — the exact baseline; at corpus
@@ -119,39 +125,21 @@ object Knn {
     * quality needs only O(points-per-centroid) vectors (FAISS trains IVF
     * on 256/centroid by default), so ~`trainPerCentroid * centroids`
     * rows cap the iterative working set no matter how large the corpus
-    * is. The sample is a hash-threshold Bernoulli filter — keep vid iff
-    * xxhash64(vid) mod 2²⁰ falls under cap/N of the range — a pure
-    * projection-level prune: membership is a function of the id alone
-    * (layout- and run-invariant), and NO sort or shuffle touches the
-    * corpus. (An orderBy(hash).limit(cap) take-k looks equivalent but
-    * silently degrades to a GLOBAL corpus sort once cap exceeds
-    * spark.sql.execution.topKSortFallbackThreshold, 10k by default —
-    * the trap this formulation exists to avoid.) The expected-cap-size
-    * sample is pinned once, so iterations re-read a small local table
-    * instead of re-scanning the corpus per iteration; each iteration is
-    * then one pass over it (C small, broadcast) plus a C-group
-    * aggregate — the standard distributed k-means. Degenerate draws
-    * (sample smaller than `centroids`) fall back to full-corpus
-    * training. `trainPerCentroid <= 0` disables sampling (exact
-    * full-corpus Lloyd's). */
+    * is. The sample ([[pinnedTrainSample]]) is a hash-threshold
+    * Bernoulli filter on the id — membership is layout- and
+    * run-invariant, and NO sort or shuffle touches the corpus
+    * ([[trainSample]]). It is pinned once, so each iteration is one pass
+    * over a small local table (C small, broadcast) plus a C-group
+    * aggregate — the standard distributed k-means. `trainPerCentroid <=
+    * 0` disables sampling (exact full-corpus Lloyd's). */
   def kmeans(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Int, iterations: Int,
       trainPerCentroid: Int = 256,
       replayable: Boolean = false): DataFrame = {
     val dims = VectorFunctions.toDouble(col(vecCol))
     val all = corpus.select(col(idCol).as("vid"), dims.as("v"))
-    val cap = trainPerCentroid.toLong * centroids
-    val hash52 =
-      if (replayable) md5Sample52 _
-      else (vid: Column) => pmod(xxhash64(vid), lit(1L << 52))
-    val vecs = if (trainPerCentroid > 0) {
-      val n = all.count()
-      if (cap >= n) all.localCheckpoint()
-      else {
-        val sampled = trainSample(all, cap, n, hash52).localCheckpoint()
-        if (sampled.count() < centroids) all.localCheckpoint() else sampled
-      }
-    } else all.localCheckpoint()
+    val vecs = pinnedTrainSample(all, trainPerCentroid, centroids,
+      if (replayable) md5Sample52 _ else xxSample52)
     val init = vecs.orderBy(col("vid")).limit(centroids)
       .select(col("vid").as("centroid_id"), col("v").as("centv"))
     trainLoop(vecs, init, iterations, replayable)
@@ -181,15 +169,35 @@ object Knn {
     * thresholds; the scalar is driver-side BigInt so cap·2⁵² cannot
     * overflow. Ceil keeps the EXPECTED size ≥ cap (the draw itself is
     * binomial, so the realized size wobbles around it either way); the
-    * degenerate-draw fallback in [[kmeans]] covers an unlucky tail. */
+    * degenerate-draw fallback in [[pinnedTrainSample]] covers an unlucky
+    * tail. */
   private[graft] def trainSample(all: DataFrame, cap: Long, n: Long,
-      hash52: Column => Column =
-        vid => pmod(xxhash64(vid), lit(1L << 52))): DataFrame = {
+      hash52: Column => Column = xxSample52): DataFrame = {
     val range = 1L << 52
     val keep = math.max(1L,
       ((BigInt(cap) * range + n - 1) / n).toLong) // ceil(cap·range/n)
     all.where(hash52(col("vid")) < lit(keep))
   }
+
+  private val xxSample52: Column => Column =
+    vid => pmod(xxhash64(vid), lit(1L << 52))
+
+  /** The pinned training set of [[kmeans]] and [[pqCodebooksTrained]]:
+    * a [[trainSample]] of ~`trainPerCentroid * centroids` rows, else all
+    * of `all` — when the cap covers it, sampling is off (`<= 0`), or the
+    * draw came out smaller than `centroids`. */
+  private def pinnedTrainSample(all: DataFrame, trainPerCentroid: Int,
+      centroids: Int, hash52: Column => Column = xxSample52): DataFrame =
+    if (trainPerCentroid <= 0) all.localCheckpoint()
+    else {
+      val cap = trainPerCentroid.toLong * centroids
+      val n = all.count()
+      if (cap >= n) all.localCheckpoint()
+      else {
+        val sampled = trainSample(all, cap, n, hash52).localCheckpoint()
+        if (sampled.count() < centroids) all.localCheckpoint() else sampled
+      }
+    }
 
   private def trainLoop(vecs: DataFrame, init: DataFrame,
       iterations: Int, replayable: Boolean = false): DataFrame = {
@@ -316,9 +324,7 @@ object Knn {
       .select(col("vid").as("query_id"), col("recon").as("qr"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("vid"))
       .withColumn("dot", dotFn(col("qr"), col("recon")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dot").desc, col("vid"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topPerQuery(scored, "dot", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"), col("dot"),
         col("rk"))
   }
@@ -466,12 +472,7 @@ object Knn {
     * (no corpus-dependent state, unlike IVF centroids). */
   private def lshBuckets(vecs: DataFrame, planes: DataFrame, tables: Int,
       bits: Int, dotFn: (Column, Column) => Column): DataFrame = {
-    // array_sort on struct(t, p, w) orders lexicographically by (t, p),
-    // so plane (t, p) lands at index t*bits + p (0-based).
-    val planeArr = planes.groupBy()
-      .agg(array_sort(collect_list(struct(col("t"), col("p"), col("w"))))
-        .as("__planes"))
-    vecs.crossJoin(broadcast(planeArr))
+    vecs.crossJoin(broadcast(planeArray(planes)))
       .select(col("vid"), col("v"),
         posexplode(transform(sequence(lit(0), lit(tables - 1)), t =>
           aggregate(sequence(lit(0), lit(bits - 1)), lit(0L), (acc, p) =>
@@ -481,6 +482,14 @@ object Knn {
               pow(lit(2.0), p).cast("long")).otherwise(lit(0L)))))
           .as(Seq("t", "bucket")))
   }
+
+  /** The planes folded into ONE `__planes` array row: array_sort on
+    * struct(t, p, w) orders lexicographically by (t, p), so plane (t, p)
+    * lands at index t*bits + p (0-based). */
+  private def planeArray(planes: DataFrame): DataFrame =
+    planes.groupBy()
+      .agg(array_sort(collect_list(struct(col("t"), col("p"), col("w"))))
+        .as("__planes"))
 
   /** Query-side MULTI-PROBE bucketing (Lv et al. 2007, VLDB — the
     * standard recall lift at fixed table count): per (vector, table),
@@ -496,13 +505,10 @@ object Knn {
   private def lshBucketsProbed(vecs: DataFrame, planes: DataFrame,
       tables: Int, bits: Int, dotFn: (Column, Column) => Column,
       probes: Int): DataFrame = {
-    val planeArr = planes.groupBy()
-      .agg(array_sort(collect_list(struct(col("t"), col("p"), col("w"))))
-        .as("__planes"))
     // One row per (vector, table) with the per-plane dots materialized
     // as a column: the base bucket, the margin ranking, and the flips
     // all read the same attribute instead of re-deriving T×B dots.
-    val dotted = vecs.crossJoin(broadcast(planeArr))
+    val dotted = vecs.crossJoin(broadcast(planeArray(planes)))
       .select(col("vid"), col("v"),
         explode(sequence(lit(0), lit(tables - 1))).as("t"),
         col("__planes"))
@@ -535,10 +541,10 @@ object Knn {
     * width (and `probes` validation then depends on corpus size); when
     * one corpus is queried repeatedly, resolve the width ONCE with
     * [[autoBits]] and pass `bits` explicitly (the knn_recall_at_k gate's
-    * pattern). Candidates are
-    * corpus vectors sharing ANY of `tables` B-bit sign-signature buckets
-    * with the query (collision prob per table = (1 - θ/π)^B), verified
-    * with the exact cosine and ranked per query. Returns up to k rows per
+    * pattern). Candidates are corpus vectors sharing ANY of `tables`
+    * B-bit sign-signature buckets with the query (collision prob per
+    * table = (1 - θ/π)^B), verified with the exact cosine and ranked per
+    * query. Returns up to k rows per
     * query — fewer when the buckets yield fewer candidates, the standard
     * LSH recall trade (raise `tables` / lower `bits` to widen).
     *
@@ -588,14 +594,9 @@ object Knn {
     val cb = lshBuckets(
       corpus.select(col(idCol).as("vid"), col(vecCol).as("v")),
       planes, tables, b, dotFn)
-    val qb = (if (p == 0)
-      lshBuckets(
-        queries.select(col(idCol).as("vid"), col(vecCol).as("v")),
-        planes, tables, b, dotFn)
-    else
-      lshBucketsProbed(
-        queries.select(col(idCol).as("vid"), col(vecCol).as("v")),
-        planes, tables, b, dotFn, p))
+    val qvecs = queries.select(col(idCol).as("vid"), col(vecCol).as("v"))
+    val qb = (if (p == 0) lshBuckets(qvecs, planes, tables, b, dotFn)
+      else lshBucketsProbed(qvecs, planes, tables, b, dotFn, p))
       .select(col("vid").as("query_id"), col("v").as("qv"),
         col("t"), col("bucket"))
     // A pair colliding in several tables must score once: dedup via the
@@ -606,9 +607,7 @@ object Knn {
       .groupBy(col("query_id"), col("vid"))
       .agg(first(col("qv")).as("qv"), first(col("v")).as("v"))
       .withColumn("cosine", cosineFn(col("qv"), col("v")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vid"))
-    cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topPerQuery(cand, "cosine", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"),
         col("cosine"), col("rk"))
   }
@@ -633,18 +632,23 @@ object Knn {
     val have = corpus.select(col(idCol)).limit(k).count()
     require(have == k,
       s"pqCodebooks needs >= $k corpus vectors for k=$k, found $have")
-    corpus.orderBy(col(idCol)).limit(k)
+    booksRow(corpus.orderBy(col(idCol)).limit(k)
       .select(col(idCol).as("cid"), VectorFunctions.toDouble(col(vecCol)).as("v"))
       .select(col("cid"), explode(sequence(lit(0), lit(m - 1))).as("j"),
         col("v"))
       .select(col("j"), col("cid"),
-        slice(col("v"), col("j") * sub + 1, lit(sub)).as("centv"))
-      .groupBy()
+        slice(col("v"), col("j") * sub + 1, lit(sub)).as("centv")))
+  }
+
+  /** The one-row `books` array of (j, cid, centv) sub-centroid rows:
+    * subspace j's centroids in `cid` order, so subspace j's p-th
+    * centroid lands at index j*k + p. */
+  private def booksRow(subBooks: DataFrame): DataFrame =
+    subBooks.groupBy()
       .agg(array_sort(collect_list(struct(col("j"), col("cid"), col("centv"))))
         .as("__sorted"))
       .select(transform(col("__sorted"), e => e.getField("centv"))
         .as("books"))
-  }
 
   /** PQ codebooks TRAINED per subspace — the configuration FAISS-IVFPQ
     * actually ships (each subspace's k sub-centroids from Lloyd's
@@ -661,11 +665,10 @@ object Knn {
     * 2m corpus passes that m independent [[kmeans]] samplers would
     * pay); the m Lloyd's runs then iterate over the pinned
     * ~`trainPerCentroid`·k-row sample only. Output is one tiny
-    * broadcastable row. Lloyd's can DROP a
-    * cluster that captures no sample points, which would silently
-    * mis-stride the fixed-k flat array every subspace after it: raises
-    * with the subspace named instead (retrain with smaller k or fall
-    * back to [[pqCodebooks]]). */
+    * broadcastable row. Lloyd's can DROP a cluster that captures no
+    * sample points, which would silently mis-stride the fixed-k flat
+    * array every subspace after it: raises with the subspace named
+    * instead (retrain with smaller k or fall back to [[pqCodebooks]]). */
   def pqCodebooksTrained(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, dims: Int, iterations: Int = 3,
       trainPerCentroid: Int = 256): DataFrame = {
@@ -673,20 +676,10 @@ object Knn {
     require(m * sub == dims, s"m=$m must divide dims=$dims")
     val all = corpus.select(col(idCol).as("vid"),
       VectorFunctions.toDouble(col(vecCol)).as("v"))
-    // One shared full-width sample (same Bernoulli hash prune as
-    // kmeans, same degenerate-draw fallback); the per-subspace kmeans
+    // One shared full-width sample (kmeans's); the per-subspace kmeans
     // calls below run with sampling DISABLED so they never re-scan.
-    val cap = trainPerCentroid.toLong * k
-    val pinned = if (trainPerCentroid <= 0) all.localCheckpoint()
-    else {
-      val n = all.count()
-      if (cap >= n) all.localCheckpoint()
-      else {
-        val sampled = trainSample(all, cap, n).localCheckpoint()
-        if (sampled.count() < k) all.localCheckpoint() else sampled
-      }
-    }
-    val subBooks = (0 until m).map { j =>
+    val pinned = pinnedTrainSample(all, trainPerCentroid, k)
+    booksRow((0 until m).map { j =>
       val subCorpus = pinned.select(col("vid"),
         slice(col("v"), j * sub + 1, sub).as("v"))
       val cents = kmeans(subCorpus, "vid", "v", k, iterations,
@@ -698,12 +691,7 @@ object Knn {
           "rank-addressed books array) — lower k or use pqCodebooks")
       cents.select(lit(j).as("j"), col("centroid_id").as("cid"),
         col("centv"))
-    }.reduce(_ unionAll _)
-    subBooks.groupBy()
-      .agg(array_sort(collect_list(struct(col("j"), col("cid"),
-        col("centv")))).as("__sorted"))
-      .select(transform(col("__sorted"), e => e.getField("centv"))
-        .as("books"))
+    }.reduce(_ unionAll _))
   }
 
   /** PQ top-k by asymmetric distance: corpus vectors are stored as m
@@ -731,48 +719,61 @@ object Knn {
     // scorer: pin so the codebook build runs once.
     val books = pqCodebooks(corpus, idCol, vecCol, m, codebook, dims)
       .localCheckpoint()
-    // Argmin metric: |b|² - 2a·b, the L2 expansion with the per-(vector,
-    // subspace) constant |a|² dropped — a uniform shift that preserves
-    // the ordering AND the ties, so the chosen code is the true L2
-    // argmin. Two native-dot kernels per probe, no per-probe difference
-    // arrays (a zip_with/aggregate form measured 4x slower: HOF lambdas
-    // evaluate per-element expression trees). The oracle replays this
-    // exact expression, so left-to-right rounding matches bit-for-bit.
-    def score2(a: Column, b: Column): Column =
-      dotFn(b, b) - lit(2.0) * dotFn(a, b)
-    // Sub-slices are shared by nesting transforms: the inner transform
-    // materializes each vector's m sub-vectors ONCE per row; the outer
-    // (element, index) lambda then probes all k centroids per subspace.
     val coded = corpus.crossJoin(broadcast(books))
       .select(col(idCol).as("vid"),
-        transform(
-          transform(sequence(lit(0), lit(m - 1)), j =>
-            slice(VectorFunctions.toDouble(col(vecCol)), j * sub + 1,
-              lit(sub))),
-          (sv, j) => array_min(transform(sequence(lit(1), lit(codebook)),
-            p => struct(
-              score2(sv, element_at(col("books"), j * codebook + p))
-                .as("d2"),
-              p.as("p")))).getField("p")).as("codes"))
+        pqEncode(vecCol, m, codebook, sub, dotFn).as("codes"))
     val q = queries
       .select(col(idCol).as("query_id"),
         VectorFunctions.toDouble(col(vecCol)).as("qv"))
-    val ones = array((0 until m).map(_ => lit(1.0)): _*)
     val scored = coded.join(broadcast(q), col("query_id") =!= col("vid"))
       .crossJoin(broadcast(books))
-      // Ordered Σ_j of sub-dots, again as a dot against ones: both the
-      // inner q_j·centv and the outer fold run left-to-right.
-      .withColumn("score", dotFn(
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          dotFn(slice(col("qv"), j * sub + 1, lit(sub)),
-            element_at(col("books"),
-              j * codebook + element_at(col("codes"), j + 1)))),
-        ones))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vid"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .withColumn("score", pqScore(m, codebook, sub, dotFn))
+    topPerQuery(scored, "score", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"), col("score"),
         col("rk"))
+  }
+
+  /** The PQ code of vector column `vecCol` against the one-row `books` column: per
+    * subspace j, the rank p (1..codebook) of the nearest sub-centroid,
+    * ties to the smaller rank. Argmin metric: |b|² - 2a·b, the L2
+    * expansion with the per-(vector, subspace) constant |a|² dropped — a
+    * uniform shift that preserves the ordering AND the ties, so the
+    * chosen code is the true L2 argmin. Two native-dot kernels per probe,
+    * no per-probe difference arrays (a zip_with/aggregate form measured
+    * 4x slower: HOF lambdas evaluate per-element expression trees). The
+    * oracle replays this exact expression, so left-to-right rounding
+    * matches bit-for-bit. Sub-slices are shared by nesting transforms:
+    * the inner transform materializes each vector's m sub-vectors ONCE
+    * per row; the outer (element, index) lambda then probes all k
+    * centroids per subspace. */
+  private def pqEncode(vecCol: String, m: Int, codebook: Int, sub: Int,
+      dotFn: (Column, Column) => Column): Column = {
+    def score2(a: Column, b: Column): Column =
+      dotFn(b, b) - lit(2.0) * dotFn(a, b)
+    transform(
+      transform(sequence(lit(0), lit(m - 1)), j =>
+        slice(VectorFunctions.toDouble(col(vecCol)), j * sub + 1,
+          lit(sub))),
+      (sv, j) => array_min(transform(sequence(lit(1), lit(codebook)),
+        p => struct(
+          score2(sv, element_at(col("books"), j * codebook + p))
+            .as("d2"),
+          p.as("p")))).getField("p"))
+  }
+
+  /** The ADC score of exact query `qv` against a vector's `codes`:
+    * Σ_j qv_j · books[j][code_j], the ordered sum of sub-dots written as
+    * a dot against ones, so both the inner q_j·centv and the outer fold
+    * run left-to-right and any engine reproduces it bit-for-bit. */
+  private def pqScore(m: Int, codebook: Int, sub: Int,
+      dotFn: (Column, Column) => Column): Column = {
+    val ones = array((0 until m).map(_ => lit(1.0)): _*)
+    dotFn(
+      transform(sequence(lit(0), lit(m - 1)), j =>
+        dotFn(slice(col("qv"), j * sub + 1, lit(sub)),
+          element_at(col("books"),
+            j * codebook + element_at(col("codes"), j + 1)))),
+      ones)
   }
 
   /** IVF+PQ top-k — the standard billion-vector ANN architecture (FAISS
@@ -814,12 +815,11 @@ object Knn {
     * r14, probe 23b): ADC scores only SELECT the top-`refine`
     * candidates per query; those candidates' RAW vectors are then
     * fetched and re-ranked by exact cosine, output column `cosine`.
-    * Probe 23b
-    * measured why this leg is not optional at high within-cluster
-    * similarity: 4-bit-per-subspace codes score recall@10 at 0.03–0.13
-    * where the same pruning on exact vectors reads 0.40–1.0 — ADC
-    * preserves CANDIDACY, not rank, among near-identical neighbors.
-    * Cost shape of the fetch, stated honestly: in THIS plan it is a
+    * Probe 23b measured why this leg is not optional at high
+    * within-cluster similarity: 4-bit-per-subspace codes score recall@10
+    * at 0.03–0.13 where the same pruning on exact vectors reads 0.40–1.0
+    * — ADC preserves CANDIDACY, not rank, among near-identical
+    * neighbors. Cost shape of the fetch: in THIS plan it is a
     * SECOND scan of the raw-vector table, filtered by a broadcast of
     * the |Q|·refine candidate ids — never a shuffle, but parquet still
     * reads the vector column once more end to end. On the 100 TB store
@@ -856,48 +856,22 @@ object Knn {
       s"books array has $nBooks sub-centroids, need m*codebook = " +
         s"${m * codebook} (m=$m, codebook=$codebook) — books built for " +
         "a different PQ geometry")
-    def score2(a: Column, b: Column): Column =
-      dotFn(b, b) - lit(2.0) * dotFn(a, b)
     // One corpus pass: bucket assignment + PQ encoding, raw vector
     // dropped at the end of the projection — the at-rest representation
     // is (vid, bucket, m codes).
     val coded = assignWith(corpus, idCol, vecCol, cents0, cosineFn)
       .crossJoin(broadcast(books))
       .select(col("vid"), col("bucket"),
-        transform(
-          transform(sequence(lit(0), lit(m - 1)), j =>
-            slice(VectorFunctions.toDouble(col("v")), j * sub + 1,
-              lit(sub))),
-          (sv, j) => array_min(transform(sequence(lit(1), lit(codebook)),
-            p => struct(
-              score2(sv, element_at(col("books"), j * codebook + p))
-                .as("d2"),
-              p.as("p")))).getField("p")).as("codes"))
-    // nprobe nearest buckets per query, exactly as in [[ivfWith]].
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qraw"),
-      VectorFunctions.toDouble(col(vecCol)).as("qv"))
-    val probes = q.crossJoin(broadcast(cents0))
-      .withColumn("sim", cosineFn(col("qraw"), col("centv")))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("centroid_id"))
-    val probed = probes.withColumn("rk", row_number().over(wp))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("centroid_id").as("bucket"))
-    val ones = array((0 until m).map(_ => lit(1.0)): _*)
+        pqEncode("v", m, codebook, sub, dotFn).as("codes"))
+    val probed = probedBuckets(queries.select(col(idCol).as("query_id"),
+      col(vecCol).as("qraw"), VectorFunctions.toDouble(col(vecCol)).as("qv")),
+      "qraw", cents0, nprobe, cosineFn)
     val scored = coded.join(broadcast(probed), Seq("bucket"))
       .filter(col("query_id") =!= col("vid"))
       .crossJoin(broadcast(books))
-      .withColumn("score", dotFn(
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          dotFn(slice(col("qv"), j * sub + 1, lit(sub)),
-            element_at(col("books"),
-              j * codebook + element_at(col("codes"), j + 1)))),
-        ones))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("vid"))
+      .withColumn("score", pqScore(m, codebook, sub, dotFn))
     if (refine <= 0)
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      topPerQuery(scored, "score", "vid", k)
         .select(col("query_id"), col("vid").as("neighbor_id"),
           col("score"), col("rk"))
     else {
@@ -905,8 +879,7 @@ object Knn {
       // them. The candidate list (|Q|·refine ids) rides a broadcast to
       // both fetches, so neither the corpus nor the query table is
       // shuffled — the standard refine leg's point-lookup shape.
-      val cand = scored.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= refine)
+      val cand = topPerQuery(scored, "score", "vid", refine)
         .select(col("query_id"), col("vid"))
       val fetched = corpus
         .select(col(idCol).as("vid"), col(vecCol).as("__cv"))
@@ -915,14 +888,20 @@ object Knn {
         .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       val rescored = fetched.join(broadcast(qraw), Seq("query_id"))
         .withColumn("cosine", cosineFn(col("__qv"), col("__cv")))
-      val w2 = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("vid"))
-      rescored.withColumn("rk", row_number().over(w2))
-        .filter(col("rk") <= k)
+      topPerQuery(rescored, "cosine", "vid", k)
         .select(col("query_id"), col("vid").as("neighbor_id"),
           col("cosine"), col("rk"))
     }
   }
+
+  /** Each query's `nprobe` buckets: the centroids nearest by cosine to
+    * its `raw` vector column, as (query_id, qv, bucket). */
+  private def probedBuckets(q: DataFrame, raw: String, cents: DataFrame,
+      nprobe: Int, cosineFn: (Column, Column) => Column): DataFrame =
+    topPerQuery(q.crossJoin(broadcast(cents))
+        .withColumn("sim", cosineFn(col(raw), col("centv"))),
+      "sim", "centroid_id", nprobe)
+      .select(col("query_id"), col("qv"), col("centroid_id").as("bucket"))
 
   /** IVF top-k with the deterministic smallest-id centroids — the form
     * `knn_ivf_topk` and its DuckDB oracle replay. Trained centroids go
@@ -946,23 +925,14 @@ object Knn {
     // re-executes whatever produced it per branch — for kmeans output that
     // is the ENTIRE k-means iteration chain, corpus scans included.
     val centsPinned = cents.localCheckpoint()
-    val assigned = assignBuckets(
-      corpus.select(col(idCol).as("vid"), col(vecCol).as("v")), centsPinned,
-      cosineFn)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes = q.crossJoin(broadcast(centsPinned))
-      .withColumn("sim", cosineFn(col("qv"), col("centv")))
-    val wp = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("centroid_id"))
-    val probed = probes.withColumn("rk", row_number().over(wp))
-      .filter(col("rk") <= nprobe)
-      .select(col("query_id"), col("qv"), col("centroid_id").as("bucket"))
+    val assigned = assignWith(corpus, idCol, vecCol, centsPinned, cosineFn)
+    val probed = probedBuckets(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "qv",
+      centsPinned, nprobe, cosineFn)
     val scored = assigned.join(broadcast(probed), Seq("bucket"))
       .filter(col("query_id") =!= col("vid"))
       .withColumn("cosine", cosineFn(col("qv"), col("v")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vid"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topPerQuery(scored, "cosine", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"),
         col("cosine"), col("rk"))
   }

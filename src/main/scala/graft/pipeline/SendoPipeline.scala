@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.model.Schemas
 import graft.ops.RefOps
-import graft.sink.Upsert
+import graft.sink.{StagedPublish, Upsert}
 import graft.sources.{RestScan, Transport}
 import graft.util.Overlap
 
@@ -155,11 +155,12 @@ object SendoPipeline {
   }
 
   /** S7/P5/U2/P3/P8 (etl.py:125-167): paginated rating scan per shop,
-    * tagged with its shop_id, dates parsed day-first. */
+    * tagged with its shop_id, dates parsed day-first. Each distinct shop
+    * is scanned once, though two detail pages can answer with one shop. */
   def ratings(spark: SparkSession, shopInfos: DataFrame,
       transport: Transport): DataFrame = {
     import spark.implicits._
-    val keys = shopInfos.select(col("shop_id")).as[String]
+    val keys = shopInfos.select(col("shop_id")).distinct().as[String]
     val pages = RestScan.paginated(keys, ratingUrl, transport,
       RestScan.ratingLastPage).toDF("shop_id", "page", "body")
     val parsed = pages
@@ -193,33 +194,23 @@ object SendoPipeline {
 
   /** Staged MERGE of one table (L1-L3 idiom): read target, upsert, write.
     * The staging-table lifecycle lives inside [[Upsert.upsert]]'s
-    * semantics; a write-to-stage + rename-swap replaces MySQL's
-    * staging+merge+drop. The merged plan still READS the current table
-    * files while the stage write runs, so no caching is needed and a
-    * lost/evicted partition recomputes safely — mode("overwrite") onto
-    * the path being read would delete its own input on recompute. (On a
-    * rename-less object store this swap becomes a metastore/manifest
-    * pointer flip; the two-rename window is the same one HDFS table
-    * swaps accept.)
+    * semantics; a write-to-stage + rename-swap ([[StagedPublish]], after
+    * its crash recovery) replaces MySQL's staging+merge+drop. The merged
+    * plan still READS the current table files while the stage write
+    * runs, so no caching is needed and a lost/evicted partition
+    * recomputes safely — mode("overwrite") onto the path being read
+    * would delete its own input on recompute.
     *
     * A merged result whose columns or types differ from `schema` is
     * rejected before anything is written: [[readTable]] reads by the
-    * declared schema, so such a table would fail the next run's read.
-    * A failed stage write removes its partial stage; the published table
-    * is untouched either way. */
+    * declared schema, so such a table would fail the next run's read. */
   def mergeTable(spark: SparkSession, warehouseDir: String, name: String,
       schema: StructType, source: DataFrame, pk: String): Unit = {
     val finalPath = new org.apache.hadoop.fs.Path(s"$warehouseDir/$name")
     val stage = new org.apache.hadoop.fs.Path(s"$warehouseDir/.$name.__stage__")
     val old = new org.apache.hadoop.fs.Path(s"$warehouseDir/.$name.__old__")
     val fs = finalPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // CRASH RECOVERY first: a previous run that died inside the
-    // two-rename window leaves the only copy of the table at `old`
-    // (finalPath moved aside, stage not yet published). Restore it
-    // BEFORE reading the target — deleting `old` here instead would
-    // destroy the table and merge this batch into an empty frame.
-    if (!fs.exists(finalPath) && fs.exists(old) && !fs.rename(old, finalPath))
-      throw new java.io.IOException(s"mergeTable: could not restore $old")
+    StagedPublish.recover(fs, finalPath, old)
     val target = readTable(spark, warehouseDir, name, schema)
       .select(source.columns.map(col).toIndexedSeq: _*)
     val merged = Upsert.upsert(target, source, Seq(pk))
@@ -232,15 +223,8 @@ object SendoPipeline {
     if (drift.nonEmpty) throw new IllegalArgumentException(
       s"mergeTable($name): merged columns differ from the declared schema " +
         s"${schema.simpleString}: ${drift.mkString(", ")}")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    try merged.write.mode("overwrite").parquet(stage.toString)
-    catch { case e: Throwable => fs.delete(stage, true); throw e }
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(finalPath) && !fs.rename(finalPath, old))
-      throw new java.io.IOException(s"mergeTable: could not move $finalPath aside")
-    if (!fs.rename(stage, finalPath))
-      throw new java.io.IOException(s"mergeTable: could not publish $stage")
-    fs.delete(old, true)
+    StagedPublish.publish(fs, finalPath, stage, old)(
+      merged.write.mode("overwrite").parquet(stage.toString))
   }
 
   /** The full DAG (etl.py:308-343). Returns the three final tables.

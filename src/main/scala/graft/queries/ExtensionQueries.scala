@@ -1490,14 +1490,11 @@ object ExtensionQueries extends graft.QueryModule {
     // the persisted fingerprint index, then each batch's survivors land
     // as that batch's own partition (replay-safe overwrite of itself;
     // valid because deduped survivors are pure inserts). The bench
-    // number now tracks the warehouse-scale path: O(batch) writes, ZERO
-    // table rewrite. r6's full-rewrite ingestBatch stays the correctness
-    // twin for re-keyed update sources, and the hash-bucketed
-    // ingestBatchPartitioned was measured (31.2 s → its buckets cannot
-    // prune hash-scattered ingest) and documented, not adopted.
-    // StreamingIngestSpec pins all forms equal row-for-row. The oracle
-    // replays the first-batch-wins-then-min-id rule as one window;
-    // equality pins batch ≡ stream semantics.
+    // number tracks the warehouse-scale path: O(batch) writes, ZERO
+    // table rewrite. The full-rewrite ingestBatch stays the correctness
+    // twin for re-keyed update sources; StreamingIngestSpec pins the two
+    // equal row-for-row. The oracle replays the first-batch-wins-then-
+    // min-id rule as one window; equality pins batch ≡ stream semantics.
     "stream_ingest_batches" -> { (s, dir) =>
       import s.implicits._
       val docs = Tables.documents(s, dir)

@@ -25,8 +25,9 @@ object Upsert {
     * Scale: the anti join shuffles on the PK — unavoidable for a full
     * merge; when `source` is small relative to `target` (the daily-delta
     * shape) AQE broadcasts the source side of the anti join, so the target
-    * is never shuffled. Prefer [[upsertPartitioned]] when the target is a
-    * partitioned table: only affected partitions are rewritten.
+    * is never shuffled. On a partitioned table whose daily delta lands in
+    * few partitions, [[upsertPartitioned]] rewrites only those; a delta
+    * hash-scattered across every partition prunes nothing there.
     */
   def upsert(target: DataFrame, source: DataFrame, pk: Seq[String],
       winner: Option[Seq[Column]] = None): DataFrame = {

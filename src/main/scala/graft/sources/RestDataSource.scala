@@ -52,6 +52,41 @@ object RestDataSource {
     StructField("key", StringType, nullable = false),
     StructField("page", IntegerType, nullable = false),
     StructField("body", StringType, nullable = false)))
+
+  /** The scan keys of `options`, `keysPerPartition` to a group: one input
+    * partition per group, in the batch and the streaming scan alike. */
+  private[sources] def keyGroups(options: CaseInsensitiveStringMap)
+      : Iterator[Seq[String]] = {
+    val keys = options.get("keys").split(",").map(_.trim).filter(_.nonEmpty)
+    val perPart = options.getOrDefault("keysPerPartition", "1").toInt
+    keys.grouped(perPart).map(_.toSeq)
+  }
+
+  /** The last-page test the `terminator` option names. */
+  private[sources] def lastPage(terminator: String): String => Boolean =
+    terminator match {
+      case "rating" => RestScan.ratingLastPage
+      case _ => RestScan.productLastPage
+    }
+
+  private[sources] def url(template: String, key: String, page: Int): String =
+    template.replace("{key}", key).replace("{page}", page.toString)
+
+  /** A partition reader over (key, page, body) rows, materializing only
+    * the pruned `columns`. */
+  private[sources] def reader(rows: Iterator[(String, Int, String)],
+      columns: Seq[String]): PartitionReader[InternalRow] =
+    new PartitionReader[InternalRow] {
+      private var current: (String, Int, String) = _
+      override def next(): Boolean =
+        if (rows.hasNext) { current = rows.next(); true } else false
+      override def get(): InternalRow = InternalRow.fromSeq(columns.map {
+        case "key" => UTF8String.fromString(current._1)
+        case "page" => Int.box(current._2)
+        case "body" => UTF8String.fromString(current._3)
+      })
+      override def close(): Unit = ()
+    }
 }
 
 /** Transport lookup for executors. `http` builds a real [[HttpTransport]];
@@ -105,12 +140,9 @@ private[sources] class RestBatchScan(options: CaseInsensitiveStringMap,
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new RestMicroBatchStream(options, required)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val keys = options.get("keys").split(",").map(_.trim).filter(_.nonEmpty)
-    val perPart = options.getOrDefault("keysPerPartition", "1").toInt
-    keys.grouped(perPart).map(g => RestInputPartition(g.toSeq): InputPartition)
-      .toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    RestDataSource.keyGroups(options)
+      .map(g => RestInputPartition(g): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     RestReaderFactory(
@@ -174,11 +206,8 @@ private[sources] class RestMicroBatchStream(options: CaseInsensitiveStringMap,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[RestOffset].page
     val to = end.asInstanceOf[RestOffset].page
-    val keys = options.get("keys").split(",").map(_.trim).filter(_.nonEmpty)
-    val perPart = options.getOrDefault("keysPerPartition", "1").toInt
-    keys.grouped(perPart)
-      .map(g => RestStreamPartition(g.toSeq, from + 1, to): InputPartition)
-      .toArray
+    RestDataSource.keyGroups(options)
+      .map(g => RestStreamPartition(g, from + 1, to): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -203,38 +232,24 @@ private[sources] case class RestStreamReaderFactory(urlTemplate: String,
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RestStreamPartition]
     val transport = TransportRegistry.resolve(transportName)
-    val isLast: String => Boolean = terminator match {
-      case "rating" => RestScan.ratingLastPage
-      case _ => RestScan.productLastPage
-    }
+    val isLast = RestDataSource.lastPage(terminator)
     val rows: Iterator[(String, Int, String)] = p.keys.iterator.flatMap { key =>
       Iterator.range(p.fromPage, p.toPage + 1)
         .map { page =>
-          val url = urlTemplate
-            .replace("{key}", key).replace("{page}", page.toString)
           // 4xx past a key's last page is a terminator, not a failure:
           // the stream re-probes finished keys every window (stateless
           // offsets), and many origins 404 beyond the end. Transport
           // throws IllegalStateException exactly for client errors other
           // than 429; transient errors, throttling included (IOException
           // after retries), still propagate and fail the task.
-          try Some((key, page, transport.get(url)))
+          try Some((key, page,
+            transport.get(RestDataSource.url(urlTemplate, key, page))))
           catch { case _: IllegalStateException => None }
         }
         .takeWhile(_.exists { case (_, _, body) => !isLast(body) })
         .map(_.get)
     }
-    new PartitionReader[InternalRow] {
-      private var current: (String, Int, String) = _
-      override def next(): Boolean =
-        if (rows.hasNext) { current = rows.next(); true } else false
-      override def get(): InternalRow = InternalRow.fromSeq(columns.map {
-        case "key" => UTF8String.fromString(current._1)
-        case "page" => Int.box(current._2)
-        case "body" => UTF8String.fromString(current._3)
-      })
-      override def close(): Unit = ()
-    }
+    RestDataSource.reader(rows, columns)
   }
 }
 
@@ -248,30 +263,12 @@ private[sources] case class RestReaderFactory(urlTemplate: String,
     // One transport per partition reader: connection reuse per partition,
     // never per row (SURVEY §2.1 S6 scale note).
     val transport = TransportRegistry.resolve(transportName)
-    val isLast: String => Boolean = terminator match {
-      case "rating" => RestScan.ratingLastPage
-      case _ => RestScan.productLastPage
-    }
     // Same fetch loop, window and loud-truncation rule as
     // RestScan.paginated. The pushed LIMIT caps each key's loop and stops
     // pulling; the window then cancels whatever is still in flight.
     val rows = FetchWindow.pages(keys.iterator,
-      (key, page) => urlTemplate.replace("{key}", key).replace("{page}", page.toString),
-      transport, isLast, maxPages, limit).take(limit)
-    new PartitionReader[InternalRow] {
-      private var current: (String, Int, String) = _
-      override def next(): Boolean = {
-        if (rows.hasNext) { current = rows.next(); true } else false
-      }
-      override def get(): InternalRow = {
-        val values = columns.map {
-          case "key" => UTF8String.fromString(current._1)
-          case "page" => Int.box(current._2)
-          case "body" => UTF8String.fromString(current._3)
-        }
-        InternalRow.fromSeq(values)
-      }
-      override def close(): Unit = ()
-    }
+      RestDataSource.url(urlTemplate, _, _), transport,
+      RestDataSource.lastPage(terminator), maxPages, limit).take(limit)
+    RestDataSource.reader(rows, columns)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.IncrementalAgg
+import graft.sink.StagedPublish
 
 /** Streaming maintenance of an aggregate rollup table — the
   * [[graft.ops.IncrementalAgg]] merge law run continuously via
@@ -17,8 +18,7 @@ import graft.ops.IncrementalAgg
   * the read path folds all deltas down to one row per key.
   *
   * Reads cost O(deltas); [[compact]] folds history into a single base
-  * delta with an atomic whole-directory swap (same two-rename pattern
-  * as the warehouse MERGE). Compaction races no one: the folded result
+  * delta with an atomic whole-directory swap (the warehouse MERGE's). Compaction races no one: the folded result
   * is equal under the merge law to what it replaced.
   */
 object StreamingRollup {
@@ -45,29 +45,20 @@ object StreamingRollup {
   }
 
   /** Fold every delta into a single base partition (`batch=-1`),
-    * published with an atomic directory swap. Run between batches (or
-    * from a second maintenance process — the swap is the same
-    * two-rename window every HDFS table swap accepts). */
+    * published with the warehouse MERGE's atomic directory swap and
+    * crash recovery ([[StagedPublish]]). Run between batches (or from a
+    * second maintenance process). */
   def compact(spark: SparkSession, dir: String, keys: Seq[String],
       schema: StructType): Unit = {
     val finalPath = new Path(dir)
     val stage = new Path(s"$dir.__stage__")
     val old = new Path(s"$dir.__old__")
     val fs = finalPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // Crash recovery: a death inside the rename window leaves the only
-    // copy at `old` — restore before reading (mirrors mergeTable).
-    if (!fs.exists(finalPath) && fs.exists(old) && !fs.rename(old, finalPath))
-      throw new java.io.IOException(s"compact: could not restore $old")
-    if (!fs.exists(finalPath)) return // nothing to compact
-    val folded = read(spark, dir, keys, schema)
-    if (fs.exists(stage)) fs.delete(stage, true)
-    folded.write.mode("overwrite").parquet(s"$dir.__stage__/batch=-1")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(finalPath, old))
-      throw new java.io.IOException(s"compact: could not move $finalPath aside")
-    if (!fs.rename(stage, finalPath))
-      throw new java.io.IOException(s"compact: could not publish $stage")
-    fs.delete(old, true)
+    StagedPublish.recover(fs, finalPath, old)
+    if (fs.exists(finalPath)) // else nothing to compact
+      StagedPublish.publish(fs, finalPath, stage, old)(
+        read(spark, dir, keys, schema).write.mode("overwrite")
+          .parquet(s"$stage/batch=-1"))
   }
 
   /** Start continuous rollup maintenance: per micro-batch, aggregate

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites (guide: one per suite via
@@ -31,7 +37,7 @@ trait SparkTestBase {
 
   /** Run `f` with the given SQL confs set, restoring prior values after
     * (the session is shared across suites, so leaks would be global). */
-  def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
+  def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
     val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     // The set loop lives INSIDE the try: if a later pair's set throws
     // (e.g. a static conf), the earlier pairs must still be restored —
@@ -43,5 +49,30 @@ trait SparkTestBase {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Jobs started on this thread while `body` runs, `body`'s result
+    * included. Listener events arrive in order on one queue, so once a
+    * sentinel job's start is seen, every earlier job's start was too. */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (group, sentinel) = (UUID.randomUUID().toString, UUID.randomUUID().toString)
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "sentinel job never reached the listener")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
   }
 }

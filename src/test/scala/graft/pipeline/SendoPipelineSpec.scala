@@ -2,11 +2,9 @@ package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -148,12 +146,9 @@ class SendoPipelineSpec extends AnyFunSuite with SparkTestBase {
     sequential(new CountingTransport(tagSeq, SendoFixtures.transport()), whSeq)
     val got = RequestLog.counts(tagRun)
     assert(got == RequestLog.counts(tagSeq))
-    // Every fixture URL exactly once, except shop 501's rating pages:
-    // two detail pages answer with shop 501, so the extract holds it
-    // twice and its rating scan runs once per row, as in the reference.
-    val perShopRow = (1 to 3).map(SendoPipeline.ratingUrl("501", _)).toSet
-    assert(got == SendoFixtures.pages().keySet
-      .map(u => u -> (if (perShopRow(u)) 2L else 1L)).toMap)
+    // Every fixture URL exactly once: two detail pages answer with shop
+    // 501, and its rating pages are still scanned once.
+    assert(got == SendoFixtures.pages().keySet.map(_ -> 1L).toMap)
     assert(tables(whRun) == tables(whSeq))
   }
 
@@ -197,31 +192,6 @@ class SendoPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(causes(ex).exists(c => Option(c.getMessage)
       .exists(_.contains("FAILFAST"))), s"not a parse failure: $ex")
     assert(filesOf(wh) == before)
-  }
-
-  /** Jobs started on this thread while `body` runs, `body`'s result
-    * included. Listener events arrive in order on one queue, so once a
-    * sentinel job's start is seen, every earlier job's start was too. */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val (group, sentinel) = (UUID.randomUUID().toString, UUID.randomUUID().toString)
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "sentinel job never reached the listener")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
   }
 
   test("readTable reads an existing table by its declared schema and starts no job") {

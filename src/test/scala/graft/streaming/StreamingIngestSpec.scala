@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -80,9 +81,8 @@ class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(s"$wh/docs_fpindex").count() == 2L)
   }
 
-  test("partitioned and append ingest forms equal full-rewrite ingest row-for-row") {
+  test("append ingest form equals full-rewrite ingest row-for-row") {
     val whFull = tmpDir("ingest_full")
-    val whPart = tmpDir("ingest_part")
     val whApp = tmpDir("ingest_app")
     val batches = Seq(
       Seq((1L, "doc one"), (2L, "doc two"), (3L, "DOC  one")),
@@ -91,8 +91,6 @@ class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
     batches.zipWithIndex.foreach { case (rows, i) =>
       val b = rows.toDF("doc_id", "text")
       StreamingIngest.ingestBatch(b, whFull, "docs", "text", "doc_id")
-      StreamingIngest.ingestBatchPartitioned(b, whPart, "docs", "text",
-        "doc_id", buckets = 8)
       StreamingIngest.ingestBatchAppend(b, whApp, "docs", "text",
         "doc_id", batchId = i.toLong)
     }
@@ -101,20 +99,13 @@ class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
     def idxOf(wh: String) = spark.read.parquet(s"$wh/docs_fpindex")
       .select("fp").as[String].collect().toSet
     val full = docsOf(whFull)
-    assert(docsOf(whPart) == full)
     assert(docsOf(whApp) == full)
-    assert(idxOf(whPart) == idxOf(whFull))
     assert(idxOf(whApp) == idxOf(whFull))
-    // Replay idempotence holds for both new forms: the partitioned form
-    // by MERGE idempotence, the append form by overwriting the replayed
+    // Replay idempotence: the append form overwrites the replayed
     // batch's OWN partition with identical content.
-    StreamingIngest.ingestBatchPartitioned(
-      batches.last.toDF("doc_id", "text"), whPart, "docs", "text",
-      "doc_id", buckets = 8)
     StreamingIngest.ingestBatchAppend(
       batches.last.toDF("doc_id", "text"), whApp, "docs", "text",
       "doc_id", batchId = 2L)
-    assert(docsOf(whPart) == full)
     assert(docsOf(whApp) == full)
   }
 
@@ -227,11 +218,49 @@ class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
     assert(read(None).count() == 16L)
   }
 
+  test("each ingest form runs the same number of Spark jobs per batch: " +
+      "no isEmpty probe on the append forms, one signing pass per batch") {
+    val exact = Seq(
+      Seq((1L, "doc one"), (2L, "doc two"), (3L, "DOC  one")),
+      Seq((4L, "doc one"), (5L, "doc three"))).map(_.toDF("doc_id", "text"))
+    val near = Seq(
+      Seq((1L, longA), (2L, longA), (3L, null)),
+      Seq((4L, longA), (5L, longB), (6L, "hi"))).map(_.toDF("doc_id", "text"))
+    val a = Seq(1.0f, 2.0f, -3.0f, 0.5f)
+    val emb = Seq(Seq((1L, a), (2L, a)), Seq((3L, a), (4L, a.map(x => -x))))
+      .map(_.toDF("vec_id", "embedding"))
+    // Jobs per call, batch after batch into one fresh warehouse.
+    def counts(batches: Seq[DataFrame])(
+        ingest: (DataFrame, String, Long) => Unit): Seq[Int] = {
+      val wh = tmpDir("ingest_jobs")
+      batches.zipWithIndex.map { case (b, i) =>
+        jobsStartedBy(ingest(b, wh, i.toLong))._2
+      }
+    }
+    val got = Map(
+      "append" -> counts(exact)((b, wh, i) =>
+        StreamingIngest.ingestBatchAppend(b, wh, "docs", "text", "doc_id", i)),
+      "near-dup" -> counts(near)((b, wh, i) =>
+        StreamingIngest.ingestBatchNearDup(b, wh, "docs", "text", "doc_id", i)),
+      "embedding" -> counts(emb)((b, wh, i) =>
+        StreamingIngest.ingestBatchEmbDup(b, wh, "emb", "embedding", "vec_id",
+          i, dims = 4)),
+      // Measured without AQE: with it, the MERGE form's second call runs
+      // 11 or 12 jobs, depending on when AQE re-plans a join of one of
+      // its MERGEs; the append forms' counts hold run after run.
+      "MERGE" -> withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+        counts(exact)((b, wh, _) =>
+          StreamingIngest.ingestBatch(b, wh, "docs", "text", "doc_id"))
+      })
+    assert(got == Map("append" -> Seq(7, 7), "near-dup" -> Seq(12, 14),
+      "embedding" -> Seq(16, 16), "MERGE" -> Seq(5, 6)))
+  }
+
   test("near-dup ingest: a failed band-index write still lands the " +
       "survivors, and replaying the batch converges to an uninterrupted run") {
     val b0 = Seq((1L, longA), (2L, longA), (3L, null)).toDF("doc_id", "text")
     val b1 = Seq((4L, longA), (5L, longB)).toDF("doc_id", "text")
-    def ingest(b: org.apache.spark.sql.DataFrame, wh: String, id: Long): Unit =
+    def ingest(b: DataFrame, wh: String, id: Long): Unit =
       StreamingIngest.ingestBatchNearDup(b, wh, "docs", "text", "doc_id", batchId = id)
     def docsOf(wh: String) = spark.read.parquet(s"$wh/docs")
       .select("doc_id", "text", "ingest_batch").collect().toSet

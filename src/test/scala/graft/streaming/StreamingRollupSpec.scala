@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -69,6 +71,33 @@ class StreamingRollupSpec extends AnyFunSuite with SparkTestBase {
     StreamingRollup.writeDelta(
       rollup(Seq(("b", 1L)).toDF("k", "v")), dir, 2L)
     assert(state(dir) == Map("a" -> ((2L, 5L)), "b" -> ((2L, 3L))))
+  }
+
+  test("a compact whose stage write fails leaves the rollup unchanged " +
+      "and no stage directory") {
+    val dir = tmpDir("rollup_failed_compact")
+    StreamingRollup.writeDelta(
+      rollup(Seq(("a", 1L), ("b", 2L)).toDF("k", "v")), dir, 0L)
+    StreamingRollup.writeDelta(
+      rollup(Seq(("a", 4L)).toDF("k", "v")), dir, 1L)
+    val before = state(dir)
+    // A delta file that is not parquet, sorted after the file schema
+    // inference reads: the fold's scan fails inside the stage write.
+    val corrupt = Paths.get(dir, "batch=1", "part-99999-corrupt.parquet")
+    Files.write(corrupt, "not parquet".getBytes("UTF-8"))
+    def files = {
+      val all = Files.walk(Paths.get(dir))
+      try all.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.readAllBytes(f).toVector).toMap
+      finally all.close()
+    }
+    val filesBefore = files
+    intercept[Exception](StreamingRollup.compact(spark, dir, Seq("k"), schema))
+    assert(files == filesBefore)
+    assert(!Files.exists(Paths.get(s"$dir.__stage__")),
+      "a failed compact must not leave its stage behind")
+    Files.delete(corrupt)
+    assert(state(dir) == before)
   }
 
   test("reading an absent rollup yields an empty frame, not a failure") {
