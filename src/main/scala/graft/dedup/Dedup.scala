@@ -852,8 +852,9 @@ object Dedup {
     * survives streaming ingest and incremental index maintenance, at the
     * cost of needing `tables` bucket rows per vector instead of one.
     *
-    * Scale shape: one unshuffled bucketing pass (planes broadcast), then
-    * a NARROW, SALTED (t, bucket) self-join, one pair-dedup aggregate
+    * Scale shape: one unshuffled bucketing pass (each vector signed
+    * once by the native kernel), then a NARROW, SALTED (t, bucket)
+    * self-join, one pair-dedup aggregate
     * and an exact-cosine verify — the [[minhashPairs]] plan in vector
     * space:
     *
@@ -905,14 +906,12 @@ object Dedup {
       tables: Int = 0, bits: Int = 0,
       cosineFn: (Column, Column) => Column =
         graft.functions.VectorFunctions.cosineNative,
-      dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative,
       blockRows: Int = 1024): DataFrame = {
     val b = if (bits > 0) bits
       else graft.functions.Knn.autoBits(corpus.count())
     val t = if (tables > 0) tables else graft.functions.Knn.autoTables(b)
     val bucketed = graft.functions.Knn.lshBucketTable(
-      corpus, idCol, vecCol, t, b, dims, dotFn)
+      corpus, idCol, vecCol, t, b, dims)
     val cand = saltedCandidatePairs(
       bucketed.select(col("vid").as("id"), col("t"), col("bucket")),
       Seq("t", "bucket"), blockRows)
@@ -935,11 +934,9 @@ object Dedup {
     * rebuilding as the corpus grows — new rows bucket against the same
     * planes forever. */
   def embeddingLshIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      dims: Int, tables: Int = 8, bits: Int = 12,
-      dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative): DataFrame =
+      dims: Int, tables: Int = 8, bits: Int = 12): DataFrame =
     graft.functions.Knn.lshBucketTable(corpus, idCol, vecCol, tables, bits,
-      dims, dotFn).select(col("t"), col("bucket")).distinct()
+      dims).select(col("t"), col("bucket")).distinct()
 
   /** Incremental ingestion near-dup dedup for EMBEDDINGS: the
     * [[incrementalMinhashDedup]] shape in vector space — O(batch) per
@@ -961,16 +958,15 @@ object Dedup {
     * The pairs path wants candidates cheap (verify cleans up); the
     * ingest path wants buckets precise (nothing cleans up).
     *
-    * Scale shape: one unshuffled bucketing pass over the batch (planes
-    * broadcast), one (t, bucket) window shuffle O(batch·tables), one
+    * Scale shape: one unshuffled bucketing pass over the batch (each
+    * vector signed once by the native kernel), one (t, bucket) window
+    * shuffle O(batch·tables), one
     * semi-join probe against the pre-bucketed index. */
   def incrementalEmbeddingDedup(batch: DataFrame, lshIndex: DataFrame,
       idCol: String, vecCol: String, dims: Int,
-      tables: Int = 8, bits: Int = 12,
-      dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative): DataFrame =
+      tables: Int = 8, bits: Int = 12): DataFrame =
     incrementalEmbeddingDedupWithIndex(batch, lshIndex, idCol, vecCol,
-      dims, tables, bits, dotFn)._1
+      dims, tables, bits)._1
 
   /** [[incrementalEmbeddingDedup]] returning ALSO the survivors'
     * distinct (t, bucket) signature keys — from the same pinned bucket
@@ -978,11 +974,9 @@ object Dedup {
     * [[incrementalMinhashDedupWithIndex]] rationale in vector space). */
   def incrementalEmbeddingDedupWithIndex(batch: DataFrame,
       lshIndex: DataFrame, idCol: String, vecCol: String, dims: Int,
-      tables: Int = 8, bits: Int = 12,
-      dotFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.dotNative): (DataFrame, DataFrame) =
+      tables: Int = 8, bits: Int = 12): (DataFrame, DataFrame) =
     bucketDedup(batch, graft.functions.Knn.lshBucketTable(batch, idCol,
-        vecCol, tables, bits, dims, dotFn)
+        vecCol, tables, bits, dims)
       .select(col("vid").as("id"), col("t"), col("bucket")),
       lshIndex, idCol, Seq("t", "bucket"))
 

@@ -1,8 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlShim, Row,
+  SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  LongType, MapType, StructField, StructType}
+
+import graft.functions.expressions.{LshCollisions, LshSignature}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (SURVEY §2.7): brute-force cosine top-k as the exact baseline, and two
@@ -441,99 +449,44 @@ object Knn {
     * planes exactly and re-runs never shift buckets (no RNG state to
     * persist). Sign-random-projection only needs symmetric weights, not
     * gaussian ones, for the collision-probability guarantee 1 - θ/π.
-    * One row per plane; T×B×D md5 digests total (a few thousand), done
-    * once and broadcast. */
+    * One row per plane, computed on the driver from
+    * [[graft.functions.expressions.LshSignature.planes]] — the same
+    * matrix the signing kernel reads — so the frame starts no job. */
   def lshPlanes(spark: SparkSession, tables: Int, bits: Int,
       dims: Int): DataFrame = {
-    def u(c: Column): Column = graft.functions.Sketches.unit52(c)
-    val t = floor(col("id") / bits).cast("int")
-    val p = pmod(col("id"), lit(bits)).cast("int")
-    spark.range(tables.toLong * bits).select(
-      t.as("t"), p.as("p"),
-      transform(sequence(lit(0), lit(dims - 1)), d =>
-        u(concat_ws(":", lit("lsh"), t, p, d)) * 2.0 - 1.0).as("w"))
+    val w = LshSignature.planes(tables, bits, dims)
+    val rows = for (t <- 0 until tables; p <- 0 until bits) yield {
+      val off = (t * bits + p) * dims
+      Row(t, p, w.slice(off, off + dims).toSeq)
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("t", IntegerType, nullable = false),
+      StructField("p", IntegerType, nullable = false),
+      StructField("w", ArrayType(DoubleType, containsNull = false),
+        nullable = false))))
   }
 
-  /** Public form of the LSH bucketing pass: (vid, v, t, bucket) for a
-    * corpus — the reusable leg shared by search ([[lshCosine]]) and
-    * near-dup pair generation
-    * ([[graft.dedup.Dedup.embeddingLshPairs]]). */
+  /** The [[graft.functions.expressions.LshSignature]] kernel over vector
+    * column `v`: `tables` B-bit buckets, each followed by its `probes`
+    * margin-ranked Hamming-1 neighbours. */
+  private def lshSignature(v: Column, tables: Int, bits: Int, dims: Int,
+      probes: Int = 0): Column =
+    GraftSqlShim.column(LshSignature(GraftSqlShim.expression(v), tables,
+      bits, dims, probes))
+
+  /** Public form of the LSH bucketing pass: (vid, v, t, bucket) for
+    * every vector × hash table, bucket = the B-bit sign signature of the
+    * vector against table t's hyperplanes — the reusable leg of
+    * near-dup pair generation ([[graft.dedup.Dedup.embeddingLshPairs]])
+    * and the incremental embedding dedup. Each vector is signed once,
+    * by the native kernel; the corpus is never shuffled, and the pass
+    * is identical for batch and streaming input (no corpus-dependent
+    * state, unlike IVF centroids). */
   def lshBucketTable(corpus: DataFrame, idCol: String, vecCol: String,
-      tables: Int, bits: Int, dims: Int,
-      dotFn: (Column, Column) => Column = VectorFunctions.dotNative): DataFrame =
-    lshBuckets(corpus.select(col(idCol).as("vid"), col(vecCol).as("v")),
-      lshPlanes(corpus.sparkSession, tables, bits, dims), tables, bits, dotFn)
-
-  /** (vid, v, t, bucket) for every vector × hash table: bucket = the
-    * B-bit sign signature of the vector against table t's hyperplanes.
-    * The planes fold into ONE broadcast array row and each vector signs
-    * all T×B planes in a single projection — the corpus is never
-    * shuffled, and the pass is identical for batch and streaming input
-    * (no corpus-dependent state, unlike IVF centroids). */
-  private def lshBuckets(vecs: DataFrame, planes: DataFrame, tables: Int,
-      bits: Int, dotFn: (Column, Column) => Column): DataFrame = {
-    vecs.crossJoin(broadcast(planeArray(planes)))
-      .select(col("vid"), col("v"),
-        posexplode(transform(sequence(lit(0), lit(tables - 1)), t =>
-          aggregate(sequence(lit(0), lit(bits - 1)), lit(0L), (acc, p) =>
-            acc + when(
-              dotFn(col("v"), element_at(col("__planes"), t * bits + p + 1)
-                .getField("w")) >= 0.0,
-              pow(lit(2.0), p).cast("long")).otherwise(lit(0L)))))
-          .as(Seq("t", "bucket")))
-  }
-
-  /** The planes folded into ONE `__planes` array row: array_sort on
-    * struct(t, p, w) orders lexicographically by (t, p), so plane (t, p)
-    * lands at index t*bits + p (0-based). */
-  private def planeArray(planes: DataFrame): DataFrame =
-    planes.groupBy()
-      .agg(array_sort(collect_list(struct(col("t"), col("p"), col("w"))))
-        .as("__planes"))
-
-  /** Query-side MULTI-PROBE bucketing (Lv et al. 2007, VLDB — the
-    * standard recall lift at fixed table count): per (vector, table),
-    * emit the exact bucket PLUS `probes` Hamming-1 neighbor buckets,
-    * flipping the bits whose hyperplane margin |v·w| is smallest —
-    * exactly the bits most likely to disagree with a true near
-    * neighbor's signature. Ties on the margin break to the lower plane
-    * index, so the probe sequence is a pure function of the data and
-    * any engine replays it. Candidate cost grows ~(probes+1)×; the
-    * corpus side is untouched (still one unshuffled bucketing pass),
-    * which preserves the data-independent / streaming-safe property —
-    * only the (tiny, broadcast) query side fans out. */
-  private def lshBucketsProbed(vecs: DataFrame, planes: DataFrame,
-      tables: Int, bits: Int, dotFn: (Column, Column) => Column,
-      probes: Int): DataFrame = {
-    // One row per (vector, table) with the per-plane dots materialized
-    // as a column: the base bucket, the margin ranking, and the flips
-    // all read the same attribute instead of re-deriving T×B dots.
-    val dotted = vecs.crossJoin(broadcast(planeArray(planes)))
-      .select(col("vid"), col("v"),
-        explode(sequence(lit(0), lit(tables - 1))).as("t"),
-        col("__planes"))
-      .withColumn("__dots", transform(sequence(lit(0), lit(bits - 1)), p =>
-        dotFn(col("v"),
-          element_at(col("__planes"), col("t") * bits + p + 1)
-            .getField("w"))))
-    val base = aggregate(sequence(lit(0), lit(bits - 1)), lit(0L),
-      (acc, p) => acc + when(element_at(col("__dots"), p + 1) >= 0.0,
-        pow(lit(2.0), p).cast("long")).otherwise(lit(0L)))
-    // Flip candidates ranked by (|margin|, plane): the array_sort of
-    // (m, p) structs is the margin order, sliced to the probe budget.
-    val flips = slice(
-      array_sort(transform(sequence(lit(0), lit(bits - 1)), p =>
-        struct(abs(element_at(col("__dots"), p + 1)).as("m"),
-          p.cast("int").as("p")))),
-      1, probes)
-    dotted
-      .withColumn("__base", base)
-      .select(col("vid"), col("v"), col("t"),
-        explode(concat(array(col("__base")),
-          transform(flips, f => col("__base")
-            .bitwiseXOR(pow(lit(2.0), f.getField("p")).cast("long")))))
-          .as("bucket"))
-  }
+      tables: Int, bits: Int, dims: Int): DataFrame =
+    corpus.select(col(idCol).as("vid"), col(vecCol).as("v"),
+      posexplode(lshSignature(col(vecCol), tables, bits, dims))
+        .as(Seq("t", "bucket")))
 
   /** LSH-bucketed approximate top-k cosine neighbors. NOTE the default
     * `bits = 0` makes this call EAGER — it runs a `corpus.count()`
@@ -547,11 +500,19 @@ object Knn {
     * query. Returns up to k rows per
     * query — fewer when the buckets yield fewer candidates, the standard
     * LSH recall trade (raise `tables` / lower `bits` to widen).
+    * PRECONDITION: corpus ids are unique (a repeated corpus id is
+    * scored once per row); a repeated query id is searched once, with
+    * its first vector.
     *
-    * Scale: bucketing is one unshuffled pass over the corpus (planes
-    * broadcast); the candidate join broadcasts the bucketed probe set, so
-    * the only shuffle is the per-(query, neighbor) dedup aggregate on
-    * candidate rows — cost ∝ candidates, never |Q|×|N|. The default
+    * Scale: the query side's probe keys are signed and folded into ONE
+    * broadcast row ([[probeRow]]) — per table, bucket → the queries
+    * probing it, plus the query vectors.
+    * Each corpus row is then signed once by the native
+    * [[graft.functions.expressions.LshSignature]] kernel, looks its T
+    * buckets up in that row, and emits only the distinct queries it
+    * collides with, which are scored in place; the only shuffle is the
+    * per-query top-k on candidate rows — cost ∝ candidates, never
+    * |Q|×|N|, and no vector is copied per table. The default
     * `bits = 0` AUTO-SIZES B = max(6, ⌈log₂(n/32)⌉) exactly like
     * [[graft.dedup.Dedup.embeddingLshPairs]] (r12): a FIXED B holds
     * 2^B buckets per table at every corpus size, so per-query candidate
@@ -569,8 +530,10 @@ object Knn {
     * embedding corpora sit at much higher cosine and prune far harder.
     *
     * `probes` > 0 turns on margin-ranked MULTI-PROBE on the query side
-    * ([[lshBucketsProbed]]): each query additionally visits its `probes`
-    * least-confident Hamming-1 neighbor buckets per table, lifting
+    * (Lv et al. 2007, VLDB): each query additionally visits its `probes`
+    * least-confident Hamming-1 neighbor buckets per table — the bits
+    * whose hyperplane margin |v·w| is smallest, ties to the lower plane,
+    * so any engine replays the probe sequence — lifting
     * recall at ~(probes+1)× candidate cost WITHOUT growing the corpus
     * index — the knob to turn before adding tables. The DEFAULT is
     * `probes = -1` (r14, was 0): the budget scales WITH the resolved
@@ -584,32 +547,62 @@ object Knn {
   def lshCosine(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, dims: Int, tables: Int = 24, bits: Int = 0,
       cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative,
-      dotFn: (Column, Column) => Column = VectorFunctions.dotNative,
       probes: Int = -1): DataFrame = {
     val b = if (bits > 0) bits else autoBits(corpus.count())
     val p = if (probes == -1) autoProbes(b) else probes
     require(p >= 0 && p <= b,
       s"probes must be in [0, bits=$b] or -1 (auto): $probes")
-    val planes = lshPlanes(corpus.sparkSession, tables, b, dims)
-    val cb = lshBuckets(
-      corpus.select(col(idCol).as("vid"), col(vecCol).as("v")),
-      planes, tables, b, dotFn)
-    val qvecs = queries.select(col(idCol).as("vid"), col(vecCol).as("v"))
-    val qb = (if (p == 0) lshBuckets(qvecs, planes, tables, b, dotFn)
-      else lshBucketsProbed(qvecs, planes, tables, b, dotFn, p))
-      .select(col("vid").as("query_id"), col("v").as("qv"),
-        col("t"), col("bucket"))
-    // A pair colliding in several tables must score once: dedup via the
-    // (query, neighbor) aggregate, vectors riding `first` — never a
-    // join back to the corpus.
-    val cand = cb.join(broadcast(qb), Seq("t", "bucket"))
-      .filter(col("query_id") =!= col("vid"))
-      .groupBy(col("query_id"), col("vid"))
-      .agg(first(col("qv")).as("qv"), first(col("v")).as("v"))
-      .withColumn("cosine", cosineFn(col("qv"), col("v")))
+    val probed = probeRow(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+        lshSignature(col(vecCol), tables, b, dims, p).as("keys")),
+      tables, p)
+    val hits = GraftSqlShim.column(LshCollisions(
+      GraftSqlShim.expression(col("__sig")),
+      GraftSqlShim.expression(col("__probe"))))
+    val cand = corpus
+      .select(col(idCol).as("vid"), col(vecCol).as("v"),
+        lshSignature(col(vecCol), tables, b, dims).as("__sig"))
+      .crossJoin(broadcast(probed))
+      .select(col("vid"), col("v"), col("__qs"), explode(hits).as("__qi"))
+      .select(col("vid"), col("v"), col("__qs")(col("__qi")).as("__q"))
+      .filter(col("__q.query_id") =!= col("vid"))
+      .select(col("__q.query_id").as("query_id"), col("vid"),
+        cosineFn(col("__q.qv"), col("v")).as("cosine"))
     topPerQuery(cand, "cosine", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"),
         col("cosine"), col("rk"))
+  }
+
+  /** The query side of [[lshCosine]] folded into ONE row:
+    * `__probe`, per table, bucket → indices into `__qs`, the
+    * (query_id, qv) of every query. `q` is (query_id, qv, keys) with
+    * [[lshSignature]]'s `1 + probes` keys per table. The fold is a
+    * single-partition map, not an aggregate: no shuffle, and the
+    * broadcast that reads it is the query side's only job. Null ids
+    * never match; a repeated id keeps its first vector. */
+  private def probeRow(q: DataFrame, tables: Int, probes: Int): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("__probe", ArrayType(MapType(LongType,
+        ArrayType(IntegerType, containsNull = false),
+        valueContainsNull = false), containsNull = false)),
+      StructField("__qs", ArrayType(StructType(q.schema.fields.take(2)),
+        containsNull = false))))
+    q.coalesce(1).mapPartitions { rows: Iterator[Row] =>
+      val queries = mutable.LinkedHashMap.empty[Any, (Int, Row)]
+      val probe = Array.fill(tables)(
+        mutable.LinkedHashMap.empty[Long, mutable.ArrayBuffer[Int]])
+      rows.filterNot(_.isNullAt(0)).foreach { r =>
+        val i = queries.getOrElseUpdate(r.get(0),
+          (queries.size, Row(r.get(0), r.get(1))))._1
+        r.getSeq[Long](2).zipWithIndex.foreach { case (bucket, j) =>
+          probe(j / (1 + probes)).getOrElseUpdate(bucket,
+            mutable.ArrayBuffer.empty[Int]) += i
+        }
+      }
+      Iterator.single(Row(
+        probe.toSeq.map(_.map { case (bk, is) => bk -> is.toSeq }.toMap),
+        queries.values.map(_._2).toSeq))
+    }(Encoders.row(schema)).toDF()
   }
 
   /** Product-quantization codebooks as ONE broadcastable array row:

@@ -860,8 +860,7 @@ object ExtensionQueries extends graft.QueryModule {
       Knn.lshCosine(graft.util.Spread.spreadInput(emb, col("vec_id")),
         emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, dims = 64,
-        cosineFn = graft.GraftFunctions.cosineSim,
-        dotFn = graft.GraftFunctions.dotProduct, probes = 0)
+        cosineFn = graft.GraftFunctions.cosineSim, probes = 0)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -882,8 +881,7 @@ object ExtensionQueries extends graft.QueryModule {
       Knn.lshCosine(graft.util.Spread.spreadInput(emb, col("vec_id")),
         emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, dims = 64,
-        cosineFn = graft.GraftFunctions.cosineSim,
-        dotFn = graft.GraftFunctions.dotProduct, probes = -1)
+        cosineFn = graft.GraftFunctions.cosineSim, probes = -1)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -997,10 +995,9 @@ object ExtensionQueries extends graft.QueryModule {
         ids(Knn.ivf(emb, qs, "vec_id", "embedding", k = 10,
           centroids = 16, nprobe = 4, cosineFn = cos), "ivf")
         .union(ids(Knn.lshCosine(emb, qs, "vec_id", "embedding", k = 10,
-          dims = 64, bits = lshBits, cosineFn = cos, dotFn = dot,
-          probes = 0), "lsh"))
+          dims = 64, bits = lshBits, cosineFn = cos, probes = 0), "lsh"))
         .union(ids(Knn.lshCosine(emb, qs, "vec_id", "embedding", k = 10,
-          dims = 64, bits = lshBits, cosineFn = cos, dotFn = dot,
+          dims = 64, bits = lshBits, cosineFn = cos,
           probes = Knn.autoProbes(lshBits)), "lsh_mp"))
         .union(ids(Knn.pqTopK(emb, qs, "vec_id", "embedding", k = 10,
           m = 16, codebook = 16, dims = 64, dotFn = dot), "pq"))

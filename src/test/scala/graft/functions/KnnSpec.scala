@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -354,6 +355,42 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     assert(a.toSeq == b.toSeq)
     assert(a.length == 6 && a.forall(w => w.length == 4 &&
       w.forall(x => x >= -1.0 && x < 1.0)))
+    // Driver-built: reading the planes starts no Spark job, and every
+    // component equals the Spark-expression recipe (Sketches.unit52 of
+    // "lsh:t:p:d", * 2 - 1) bit for bit.
+    val (got, jobs) = jobsStartedBy(Knn.lshPlanes(spark, 3, 7, 16)
+      .select($"t", $"p", $"w").as[(Int, Int, Seq[Double])].collect())
+    assert(jobs == 0, s"$jobs jobs")
+    val ref = LshReference.planes(spark, 3, 7, 16)
+      .select($"t", $"p", $"w").as[(Int, Int, Seq[Double])].collect()
+    def bits(rows: Array[(Int, Int, Seq[Double])]) = rows.sortBy(r => (r._1, r._2))
+      .map(r => (r._1, r._2, r._3.map(java.lang.Double.doubleToRawLongBits)))
+      .toSeq
+    assert(got.length == 21 && bits(got) == bits(ref))
+  }
+
+  test("lshCosine rows equal the per-table join plan's, in at most 3 jobs per call") {
+    // LshReference.lshCosine is the plan before the signing kernel and
+    // in-row matching: per-table explode, (t, bucket) join, pair-dedup
+    // aggregate. Same candidates, same cosine kernel, same order.
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.filter($"vec_id" < 10)
+    def rows(df: DataFrame) = df.as[(Long, Long, Double, Int)].collect()
+      .sortBy(r => (r._1, r._4)).toSeq
+    val sizes = for (bits <- Seq(6, 7, 11); probes <- Seq(0, -1, 3)) yield {
+      val (got, jobs) = jobsStartedBy(rows(Knn.lshCosine(emb, queries,
+        "vec_id", "embedding", k = 10, dims = 64, bits = bits,
+        probes = probes)))
+      val want = rows(LshReference.lshCosine(emb, queries, "vec_id",
+        "embedding", k = 10, dims = 64, tables = 24, bits = bits,
+        probes = probes))
+      assert(got == want, s"bits $bits, probes $probes")
+      // Collect the queries' probe keys, then the top-k shuffle's map
+      // stage and the result stage (the per-table join plan ran 6).
+      assert(jobs <= 3, s"bits $bits, probes $probes: $jobs jobs")
+      got.size
+    }
+    assert(sizes.forall(_ > 0), sizes)
   }
 
   test("ivf recall@10 >= 0.6 vs brute force on the fixture embeddings") {

@@ -83,12 +83,22 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
 
   test("knn_lsh_topk broadcasts planes and probes: corpus joins without shuffling") {
     val p = planOf("knn_lsh_topk")
-    // Both the folded plane array and the bucketed probe set ride
-    // broadcasts; the corpus side of the candidate join must not sit
-    // under a shuffle exchange (its only exchange is the post-join
-    // (query, neighbor) dedup aggregate).
+    // The planes live in the signing kernel and the queries' probe keys
+    // ride one broadcast row; each corpus row matches its colliding
+    // queries in place, so there is no candidate join to shuffle and
+    // no (query, neighbor) dedup aggregate.
     assert(p.contains("BroadcastExchange"), p)
     assert(!p.contains("SortMergeJoin"), p)
+    assert(!p.contains("HashAggregate") && !p.contains("SortAggregate"), p)
+    // Shuffles: the corpus spread, the per-query top-k, and the query's
+    // own ORDER BY — nothing per table or per candidate pair.
+    val exchanges = p.linesIterator.map(_.trim)
+      .filter(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
+      .toSeq
+    assert(exchanges.length == 3, p)
+    assert(exchanges.count(_.contains("hashpartitioning(vec_id")) == 1, p)
+    assert(exchanges.count(_.contains("hashpartitioning(query_id")) == 1, p)
+    assert(exchanges.count(_.contains("rangepartitioning(query_id")) == 1, p)
   }
 
   test("dedup_paragraphs shuffles only on fingerprint, id, and the output sort") {
