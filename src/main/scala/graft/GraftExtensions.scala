@@ -75,15 +75,9 @@ object GraftFunctions {
     }
   }
 
-  /** Column-API form of the native cosine (goes through the registry, so
-    * [[register]] must have run on the session). */
-  def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
-
-  /** Column-API form of the native dot product (same registry caveat). */
-  def dotProduct(a: Column, b: Column): Column = call_function("dot_product", a, b)
-
-  /** Unicode normalization (same registry caveat). `form` is one of
-    * NFC|NFD|NFKC|NFKD, fixed at plan time. */
+  /** Unicode normalization (goes through the registry, so [[register]]
+    * must have run on the session). `form` is one of NFC|NFD|NFKC|NFKD,
+    * fixed at plan time. */
   def unicodeNorm(text: Column, form: String): Column =
     call_function("unicode_norm", text, org.apache.spark.sql.functions.lit(form))
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Deduplication operators for pretraining-data pipelines (SURVEY §2.7):
   * exact (fingerprint groupBy), exact pairwise n-gram Jaccard, MinHash+LSH
@@ -775,21 +775,12 @@ object Dedup {
     * shuffle key is the bucket id. Bucket skew is the risk at 100 TB:
     * use k-means centroids ([[graft.functions.Knn.kmeans]]) for balanced
     * buckets, and raise `centroids` with corpus size so per-bucket
-    * populations stay bounded.
-    *
-    * `pairScoreFn` customizes only the WITHIN-BUCKET pair score; bucket
-    * assignment is always cosine-nearest-centroid (ivfAssign's metric).
-    * A non-cosine score therefore changes which same-bucket pairs drop,
-    * but the candidate space — which pairs are ever compared — remains
-    * cosine-shaped; pairs similar under the custom score whose vectors
-    * bucket apart under cosine are never considered. */
+    * populations stay bounded. */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Int, threshold: Double,
-      pairScoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.cosine): DataFrame =
+      centroids: Int, threshold: Double): DataFrame =
     semanticDedupAssigned(
       graft.functions.Knn.ivfAssign(corpus, idCol, vecCol, centroids),
-      threshold, pairScoreFn)
+      threshold)
 
   /** [[semanticDedup]] with k-means-TRAINED centroids (the 100 TB
     * setting): trained centroids give balanced buckets, which is what
@@ -802,20 +793,18 @@ object Dedup {
     * (DedupSpec) rather than hash-compared. */
   def semanticDedupTrained(corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Int, iterations: Int, threshold: Double,
-      pairScoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.cosine,
       replayable: Boolean = false): DataFrame = {
     val cents = graft.functions.Knn
       .kmeans(corpus, idCol, vecCol, centroids, iterations,
         replayable = replayable)
     semanticDedupAssigned(
       graft.functions.Knn.assignWith(corpus, idCol, vecCol, cents),
-      threshold, pairScoreFn)
+      threshold)
   }
 
   /** Shared pair→drop→survivor tail over a (vid, v, bucket) assignment. */
-  private def semanticDedupAssigned(assignment: DataFrame, threshold: Double,
-      pairScoreFn: (Column, Column) => Column): DataFrame = {
+  private def semanticDedupAssigned(assignment: DataFrame,
+      threshold: Double): DataFrame = {
     // Three plan branches read the assignment (both pair-join sides and
     // the survivor anti join); pin it so the centroid argmin runs over
     // the corpus once, not three times (same diamond as jaccardPairs).
@@ -831,7 +820,7 @@ object Dedup {
       col("v").as("vb"))
     val dropped = a.join(b, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
-      .filter(pairScoreFn(col("va"), col("vb")) >= threshold)
+      .filter(VectorFunctions.cosine(col("va"), col("vb")) >= threshold)
       .select(col("id_b").as("vid")).distinct()
     assigned.join(dropped, Seq("vid"), "left_anti")
       .select(col("vid"), col("bucket"))
@@ -904,8 +893,6 @@ object Dedup {
   def embeddingLshPairs(corpus: DataFrame, idCol: String,
       vecCol: String, threshold: Double, dims: Int,
       tables: Int = 0, bits: Int = 0,
-      cosineFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.cosineNative,
       blockRows: Int = 1024): DataFrame = {
     val b = if (bits > 0) bits
       else graft.functions.Knn.autoBits(corpus.count())
@@ -921,7 +908,7 @@ object Dedup {
         Seq("id_a"))
       .join(vecs.select(col(idCol).as("id_b"), col(vecCol).as("vb")),
         Seq("id_b"))
-      .withColumn("cosine", cosineFn(col("va"), col("vb")))
+      .withColumn("cosine", VectorFunctions.cosine(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlShim, Row,
   SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
@@ -25,6 +26,11 @@ import graft.functions.expressions.{LshCollisions, LshSignature}
   * bucketing is a pure projection (no corpus statistics), so new corpus
   * rows bucket independently — the variant that works under streaming
   * ingest and incremental index maintenance.
+  *
+  * Every search here scores with the native kernels of
+  * [[VectorFunctions]] (cosine, dot, squared L2). All query, corpus and
+  * centroid vectors must have the same length: a shorter vector is
+  * scored over the common prefix, with no error.
   */
 object Knn {
 
@@ -33,12 +39,11 @@ object Knn {
     * neighbor. Q is broadcast: the corpus is scanned once, unshuffled,
     * except the final per-query top-k window on |Q|×k rows. */
   def bruteForce(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosine): DataFrame = {
+      idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosineFn(col("qv"), col("cv")))
+      .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("cv")))
     topPerQuery(scored, "cosine", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cosine", "rk")
   }
@@ -56,12 +61,11 @@ object Knn {
     * with cosine ≥ threshold. Quadratic — the exact baseline; at corpus
     * scale, prune candidates with [[ivfAssign]] buckets or LSH first. */
   def cosinePairs(corpus: DataFrame, idCol: String, vecCol: String,
-      threshold: Double,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosine): DataFrame = {
+      threshold: Double): DataFrame = {
     val a = corpus.select(col(idCol).as("id_a"), col(vecCol).as("va"))
     val b = corpus.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cosine", cosineFn(col("va"), col("vb")))
+      .withColumn("cosine", VectorFunctions.cosine(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }
@@ -85,18 +89,11 @@ object Knn {
 
   /** Bucket assignment against a caller-provided (centroid_id, centv)
     * table — e.g. [[kmeans]]-trained centroids. Same shuffle-free
-    * broadcast-argmin projection as [[ivfAssign]]. The default scorer is
-    * the NATIVE cosine: inside the per-centroid transform lambda each
-    * score is evaluated through ArrayTransform's interpreted path, where
-    * the HOF-composed cosine walks three nested interpreted HOF trees
-    * per centroid per row (~40µs/element measured) while the native
-    * expression is one primitive loop — bit-identical results
-    * (CosineSimilaritySpec), so oracle replays are unaffected. */
+    * broadcast-argmin projection as [[ivfAssign]]. */
   def assignWith(corpus: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame =
+      cents: DataFrame): DataFrame =
     assignBuckets(corpus.select(col(idCol).as("vid"), col(vecCol).as("v")),
-      cents, cosineFn)
+      cents)
 
   /** Shuffle-free nearest-centroid assignment: the centroid table folds
     * into ONE array row, rides a broadcast, and each vector picks its
@@ -109,15 +106,15 @@ object Knn {
     * centroid_id — the id rides the struct un-negated, so ids of ANY
     * orderable type (strings included) work; null sims (zero vectors)
     * rank below every real cosine via coalesce(-2). */
-  private def assignBuckets(vecs: DataFrame, cents: DataFrame,
-      cosineFn: (Column, Column) => Column): DataFrame = {
+  private def assignBuckets(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val centArr = cents.groupBy()
       .agg(array_sort(collect_list(struct(col("centroid_id"), col("centv"))))
         .as("__cents"))
     vecs.crossJoin(broadcast(centArr))
       .select(col("vid"), col("v"), array_min(transform(col("__cents"),
         c => struct(
-          (-coalesce(cosineFn(col("v"), c.getField("centv")), lit(-2.0)))
+          (-coalesce(VectorFunctions.cosine(col("v"), c.getField("centv")),
+            lit(-2.0)))
             .as("negsim"),
           c.getField("centroid_id").as("cid")))).as("__best"))
       .select(col("vid"), col("v"), col("__best.cid").as("bucket"))
@@ -219,31 +216,30 @@ object Knn {
     // state removes is per-iteration fixed cost — the earlier
     // localCheckpoint form paid a checkpoint job plus a broadcast-build
     // job per iteration just to hand ≤C rows to the next one; now each
-    // Lloyd's iteration is exactly ONE distributed job (assignment +
-    // mean aggregation over the pinned sample, collected straight
-    // back), which at sf0.1 is the difference between overhead-bound
-    // and data-bound training.
-    var cents: Array[org.apache.spark.sql.Row] = init.collect()
+    // Lloyd's iteration is exactly ONE aggregation (assignment + mean
+    // aggregation over the pinned sample, collected straight back; its
+    // shuffle stages are its only jobs, KnnSpec-pinned), which at sf0.1
+    // is the difference between overhead-bound and data-bound training.
+    var cents: Array[Row] = init.collect()
     for (_ <- 0 until iterations) {
-      // Same shuffle-free argmin trick as assignBuckets: centroids ride
-      // in as ONE LocalRelation array row (broadcasting a LocalRelation
-      // launches no job); each vector picks the nearest with an inline
-      // struct MIN over (d2, centroid_id) — no |N|×C window shuffle per
-      // iteration, and ids of any orderable type work. The array is
-      // deliberately NOT sorted: struct MIN under Spark's total
-      // ordering is order-independent when centroid ids are distinct
-      // (d2 ties break on cid), and an array_sort here would re-sort
-      // per corpus ROW, not once.
-      val centArr = spark.createDataFrame(
-        java.util.Collections.singletonList(
-          org.apache.spark.sql.Row(cents.toSeq)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__cents",
-            org.apache.spark.sql.types.ArrayType(rowSchema)))))
-      val assigned = vecs.crossJoin(broadcast(centArr))
-        .select(col("v"), array_min(transform(col("__cents"), c =>
+      // Same shuffle-free argmin idea as assignBuckets, but the
+      // centroids are already on the driver, so they ride in as ONE
+      // literal array column: no LocalRelation, no broadcast and so no
+      // broadcast job (a BroadcastExchange over a LocalTableScan runs
+      // one); the literal still reaches each executor once, inside the
+      // stage's broadcast task binary. Each vector picks the nearest
+      // with an inline struct MIN over (d2, centroid_id) — no |N|×C
+      // window shuffle per iteration, and ids of any orderable type
+      // work. The array is deliberately NOT sorted: struct MIN under
+      // Spark's total ordering is order-independent when centroid ids
+      // are distinct (d2 ties break on cid), and an array_sort here
+      // would re-sort per corpus ROW, not once.
+      val centArr = GraftSqlShim.column(
+        Literal.create(cents.toSeq, ArrayType(rowSchema)))
+      val assigned = vecs
+        .select(col("v"), array_min(transform(centArr, c =>
           struct(
-            VectorFunctions.l2sqNative(col("v"), c.getField("centv")).as("d2"),
+            VectorFunctions.l2sq(col("v"), c.getField("centv")).as("d2"),
             c.getField("centroid_id").as("cid")))).as("__best"))
         .select(col("__best.cid").as("centroid_id"), col("v"))
       // Elementwise mean via position explode. Production: plain avg()
@@ -322,8 +318,7 @@ object Knn {
     * codes, de-quantize at score time). Against an exact-dot baseline
     * the only error left is 8-bit rounding. Deterministic tiebreaks. */
   def bruteForceQuantized(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, levels: Int = 256,
-      dotFn: (Column, Column) => Column = VectorFunctions.dotNative): DataFrame = {
+      idCol: String, vecCol: String, k: Int, levels: Int = 256): DataFrame = {
     // One-row stats table, two quantizeCodes consumers: pin so the
     // per-dimension min/max corpus aggregate runs once.
     val stats = quantizeStats(corpus, vecCol, levels).localCheckpoint()
@@ -331,7 +326,7 @@ object Knn {
     val q = quantizeCodes(queries, idCol, vecCol, stats, levels)
       .select(col("vid").as("query_id"), col("recon").as("qr"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("vid"))
-      .withColumn("dot", dotFn(col("qr"), col("recon")))
+      .withColumn("dot", VectorFunctions.dot(col("qr"), col("recon")))
     topPerQuery(scored, "dot", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"), col("dot"),
         col("rk"))
@@ -546,7 +541,6 @@ object Knn {
     * deliberate baseline row). */
   def lshCosine(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, dims: Int, tables: Int = 24, bits: Int = 0,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative,
       probes: Int = -1): DataFrame = {
     val b = if (bits > 0) bits else autoBits(corpus.count())
     val p = if (probes == -1) autoProbes(b) else probes
@@ -567,7 +561,7 @@ object Knn {
       .select(col("vid"), col("v"), col("__qs")(col("__qi")).as("__q"))
       .filter(col("__q.query_id") =!= col("vid"))
       .select(col("__q.query_id").as("query_id"), col("vid"),
-        cosineFn(col("__q.qv"), col("v")).as("cosine"))
+        VectorFunctions.cosine(col("__q.qv"), col("v")).as("cosine"))
     topPerQuery(cand, "cosine", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"),
         col("cosine"), col("rk"))
@@ -704,8 +698,7 @@ object Knn {
     * leg). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, m: Int = 16, codebook: Int = 16,
-      dims: Int = 64,
-      dotFn: (Column, Column) => Column = VectorFunctions.dotNative): DataFrame = {
+      dims: Int = 64): DataFrame = {
     val sub = dims / m
     require(m * sub == dims, s"m=$m must divide dims=$dims")
     // One-row codebook, consumed by the coded projection AND the query
@@ -714,13 +707,13 @@ object Knn {
       .localCheckpoint()
     val coded = corpus.crossJoin(broadcast(books))
       .select(col(idCol).as("vid"),
-        pqEncode(vecCol, m, codebook, sub, dotFn).as("codes"))
+        pqEncode(vecCol, m, codebook, sub).as("codes"))
     val q = queries
       .select(col(idCol).as("query_id"),
         VectorFunctions.toDouble(col(vecCol)).as("qv"))
     val scored = coded.join(broadcast(q), col("query_id") =!= col("vid"))
       .crossJoin(broadcast(books))
-      .withColumn("score", pqScore(m, codebook, sub, dotFn))
+      .withColumn("score", pqScore(m, codebook, sub))
     topPerQuery(scored, "score", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"), col("score"),
         col("rk"))
@@ -739,10 +732,10 @@ object Knn {
     * the inner transform materializes each vector's m sub-vectors ONCE
     * per row; the outer (element, index) lambda then probes all k
     * centroids per subspace. */
-  private def pqEncode(vecCol: String, m: Int, codebook: Int, sub: Int,
-      dotFn: (Column, Column) => Column): Column = {
+  private def pqEncode(vecCol: String, m: Int, codebook: Int,
+      sub: Int): Column = {
     def score2(a: Column, b: Column): Column =
-      dotFn(b, b) - lit(2.0) * dotFn(a, b)
+      VectorFunctions.dot(b, b) - lit(2.0) * VectorFunctions.dot(a, b)
     transform(
       transform(sequence(lit(0), lit(m - 1)), j =>
         slice(VectorFunctions.toDouble(col(vecCol)), j * sub + 1,
@@ -758,12 +751,11 @@ object Knn {
     * Σ_j qv_j · books[j][code_j], the ordered sum of sub-dots written as
     * a dot against ones, so both the inner q_j·centv and the outer fold
     * run left-to-right and any engine reproduces it bit-for-bit. */
-  private def pqScore(m: Int, codebook: Int, sub: Int,
-      dotFn: (Column, Column) => Column): Column = {
+  private def pqScore(m: Int, codebook: Int, sub: Int): Column = {
     val ones = array((0 until m).map(_ => lit(1.0)): _*)
-    dotFn(
+    VectorFunctions.dot(
       transform(sequence(lit(0), lit(m - 1)), j =>
-        dotFn(slice(col("qv"), j * sub + 1, lit(sub)),
+        VectorFunctions.dot(slice(col("qv"), j * sub + 1, lit(sub)),
           element_at(col("books"),
             j * codebook + element_at(col("codes"), j + 1)))),
       ones)
@@ -789,12 +781,10 @@ object Knn {
   def ivfPq(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Int, nprobe: Int,
       m: Int = 16, codebook: Int = 16, dims: Int = 64,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative,
-      dotFn: (Column, Column) => Column = VectorFunctions.dotNative,
       refine: Int = 0): DataFrame =
     ivfPqWith(corpus, queries, idCol, vecCol, k,
       smallestIdCentroids(corpus, idCol, vecCol, centroids),
-      nprobe, m, codebook, dims, cosineFn, dotFn, refine = refine)
+      nprobe, m, codebook, dims, refine = refine)
 
   /** [[ivfPq]] against caller-provided centroids (e.g. [[kmeans]]-
     * trained — the configuration FAISS actually ships) and optionally
@@ -825,8 +815,6 @@ object Knn {
   def ivfPqWith(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, cents: DataFrame, nprobe: Int,
       m: Int = 16, codebook: Int = 16, dims: Int = 64,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative,
-      dotFn: (Column, Column) => Column = VectorFunctions.dotNative,
       booksOpt: Option[DataFrame] = None, refine: Int = 0): DataFrame = {
     val sub = dims / m
     require(m * sub == dims, s"m=$m must divide dims=$dims")
@@ -852,17 +840,17 @@ object Knn {
     // One corpus pass: bucket assignment + PQ encoding, raw vector
     // dropped at the end of the projection — the at-rest representation
     // is (vid, bucket, m codes).
-    val coded = assignWith(corpus, idCol, vecCol, cents0, cosineFn)
+    val coded = assignWith(corpus, idCol, vecCol, cents0)
       .crossJoin(broadcast(books))
       .select(col("vid"), col("bucket"),
-        pqEncode("v", m, codebook, sub, dotFn).as("codes"))
+        pqEncode("v", m, codebook, sub).as("codes"))
     val probed = probedBuckets(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qraw"), VectorFunctions.toDouble(col(vecCol)).as("qv")),
-      "qraw", cents0, nprobe, cosineFn)
+      "qraw", cents0, nprobe)
     val scored = coded.join(broadcast(probed), Seq("bucket"))
       .filter(col("query_id") =!= col("vid"))
       .crossJoin(broadcast(books))
-      .withColumn("score", pqScore(m, codebook, sub, dotFn))
+      .withColumn("score", pqScore(m, codebook, sub))
     if (refine <= 0)
       topPerQuery(scored, "score", "vid", k)
         .select(col("query_id"), col("vid").as("neighbor_id"),
@@ -880,7 +868,7 @@ object Knn {
       val qraw = queries
         .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       val rescored = fetched.join(broadcast(qraw), Seq("query_id"))
-        .withColumn("cosine", cosineFn(col("__qv"), col("__cv")))
+        .withColumn("cosine", VectorFunctions.cosine(col("__qv"), col("__cv")))
       topPerQuery(rescored, "cosine", "vid", k)
         .select(col("query_id"), col("vid").as("neighbor_id"),
           col("cosine"), col("rk"))
@@ -890,9 +878,9 @@ object Knn {
   /** Each query's `nprobe` buckets: the centroids nearest by cosine to
     * its `raw` vector column, as (query_id, qv, bucket). */
   private def probedBuckets(q: DataFrame, raw: String, cents: DataFrame,
-      nprobe: Int, cosineFn: (Column, Column) => Column): DataFrame =
+      nprobe: Int): DataFrame =
     topPerQuery(q.crossJoin(broadcast(cents))
-        .withColumn("sim", cosineFn(col(raw), col("centv"))),
+        .withColumn("sim", VectorFunctions.cosine(col(raw), col("centv"))),
       "sim", "centroid_id", nprobe)
       .select(col("query_id"), col("qv"), col("centroid_id").as("bucket"))
 
@@ -900,10 +888,9 @@ object Knn {
     * `knn_ivf_topk` and its DuckDB oracle replay. Trained centroids go
     * through [[ivfWith]]. */
   def ivf(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, centroids: Int, nprobe: Int,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame =
+      vecCol: String, k: Int, centroids: Int, nprobe: Int): DataFrame =
     ivfWith(corpus, queries, idCol, vecCol, k,
-      smallestIdCentroids(corpus, idCol, vecCol, centroids), nprobe, cosineFn)
+      smallestIdCentroids(corpus, idCol, vecCol, centroids), nprobe)
 
   /** IVF top-k against a provided (centroid_id, centv) table: search only
     * the `nprobe` buckets nearest to each query. Assignment is the
@@ -911,20 +898,19 @@ object Knn {
     * are the final per-query top-k (|Q| partitions) and none for the
     * corpus itself. */
   def ivfWith(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, cents: DataFrame, nprobe: Int,
-      cosineFn: (Column, Column) => Column = VectorFunctions.cosineNative): DataFrame = {
+      vecCol: String, k: Int, cents: DataFrame, nprobe: Int): DataFrame = {
     // Pin the (tiny, <=centroids-row) table: it feeds BOTH the
     // assignment fold and the probe broadcast, and an unpinned plan
     // re-executes whatever produced it per branch — for kmeans output that
     // is the ENTIRE k-means iteration chain, corpus scans included.
     val centsPinned = cents.localCheckpoint()
-    val assigned = assignWith(corpus, idCol, vecCol, centsPinned, cosineFn)
+    val assigned = assignWith(corpus, idCol, vecCol, centsPinned)
     val probed = probedBuckets(
       queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "qv",
-      centsPinned, nprobe, cosineFn)
+      centsPinned, nprobe)
     val scored = assigned.join(broadcast(probed), Seq("bucket"))
       .filter(col("query_id") =!= col("vid"))
-      .withColumn("cosine", cosineFn(col("qv"), col("v")))
+      .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("v")))
     topPerQuery(scored, "cosine", "vid", k)
       .select(col("query_id"), col("vid").as("neighbor_id"),
         col("cosine"), col("rk"))

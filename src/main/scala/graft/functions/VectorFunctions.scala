@@ -1,16 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlShim}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
-/** Vector math over `ArrayType(FloatType)` embedding columns, composed
-  * from codegen'd higher-order functions (no UDFs).
+import graft.functions.expressions.{CosineSimilarity, DotProduct,
+  SquaredDistance}
+
+/** Vector math over `array<float|double>` embedding columns: one native
+  * kernel per metric ([[graft.functions.expressions.VectorMetric]]),
+  * built directly, so no function-registry registration is needed.
   *
-  * Determinism note: elements are cast to double BEFORE any arithmetic, so
-  * every multiply/add is an IEEE double op on exactly-converted floats and
-  * the sequential `aggregate` accumulation matches DuckDB's
-  * list_cosine_similarity bit for bit — which keeps cosine results
-  * oracle-checkable with no tolerance.
+  * Determinism note: elements are widened to double BEFORE any
+  * arithmetic and accumulated left to right, so cosine matches DuckDB's
+  * `list_dot_product`/`sqrt` formula bit for bit — which keeps vector
+  * results oracle-checkable with no tolerance. Vectors of unequal
+  * length score their common prefix.
   */
 object VectorFunctions {
 
@@ -18,54 +23,16 @@ object VectorFunctions {
   def toDouble(v: Column): Column = transform(v, _.cast("double"))
 
   /** Sequential-fold dot product in double precision. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(toDouble(a), toDouble(b), _ * _), lit(0.0), _ + _)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
+  def dot(a: Column, b: Column): Column = native(DotProduct, a, b)
 
   /** Cosine similarity; null when either norm is zero. */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = norm(a) * norm(b)
-    when(denom > 0.0, dot(a, b) / denom)
-  }
+  def cosine(a: Column, b: Column): Column = native(CosineSimilarity, a, b)
 
-  /** Squared L2 distance (cheaper than cosine when norms are uniform). */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), _ + _)
+  /** Squared L2 distance. */
+  def l2sq(a: Column, b: Column): Column = native(SquaredDistance, a, b)
 
-  // Native (codegen Expression) forms, built directly — no function-
-  // registry registration required, so they are safe as library-internal
-  // DEFAULTS. Bit-identical to the HOF compositions above for same-
-  // length arrays (pinned in CosineSimilaritySpec / SquaredDistanceSpec);
-  // the difference is purely evaluation strategy: one fused primitive
-  // loop per call instead of interpreted zip_with/aggregate trees —
-  // which matters enormously INSIDE higher-order lambdas (the
-  // broadcast-argmin centroid assignment evaluates the score once per
-  // centroid per row through ArrayTransform's interpreted path, where a
-  // nested interpreted HOF costs ~40µs/element and a native expression
-  // ~0.1µs).
-
-  /** Native cosine; accepts array<float|double> on each side (the
-    * trained-centroid assignment scores float corpus rows against
-    * double k-means centroids). */
-  def cosineNative(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
-      graft.functions.expressions.CosineSimilarity(
-        org.apache.spark.sql.GraftSqlShim.expression(a),
-        org.apache.spark.sql.GraftSqlShim.expression(b)))
-
-  /** Native dot product (same float/double flexibility). */
-  def dotNative(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
-      graft.functions.expressions.DotProduct(
-        org.apache.spark.sql.GraftSqlShim.expression(a),
-        org.apache.spark.sql.GraftSqlShim.expression(b)))
-
-  /** Native squared L2 distance (same float/double flexibility). */
-  def l2sqNative(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
-      graft.functions.expressions.SquaredDistance(
-        org.apache.spark.sql.GraftSqlShim.expression(a),
-        org.apache.spark.sql.GraftSqlShim.expression(b)))
+  private def native(kernel: (Expression, Expression) => Expression,
+      a: Column, b: Column): Column =
+    GraftSqlShim.column(kernel(GraftSqlShim.expression(a),
+      GraftSqlShim.expression(b)))
 }

@@ -536,9 +536,9 @@ object CoreQueries extends graft.QueryModule {
           array_max(v).as("max_d"),
           array_min(v).as("min_d"),
           element_at(array_sort(v), 3).as("third_smallest"),
-          graft.GraftFunctions.dotProduct(v, transform(v, _ => lit(1.0)))
+          VectorFunctions.dot(v, transform(v, _ => lit(1.0)))
             .as("total"),
-          graft.GraftFunctions.dotProduct(slice(v, 1, 8),
+          VectorFunctions.dot(slice(v, 1, 8),
             transform(slice(v, 1, 8), _ => lit(1.0))).as("head8_total"))
     },
 

@@ -594,7 +594,7 @@ object ExtensionQueries extends graft.QueryModule {
     "knn_cosine_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       // Corpus-side unsplittable-input spread (r14, guide §2.5): the
-      // per-row HOF cosine against the broadcast probe set is the whole
+      // per-row cosine against the broadcast probe set is the whole
       // cost here, single-task otherwise. Queries side stays unspread
       // (5 rows on a broadcast).
       Knn.bruteForce(graft.util.Spread.spreadInput(emb, col("vec_id")),
@@ -603,14 +603,13 @@ object ExtensionQueries extends graft.QueryModule {
         .orderBy(col("query_id"), col("rk"))
     },
 
-    // Same brute-force top-k through the native codegen'd
-    // CosineSimilarity expression — must match the same oracle bit for
-    // bit, and beats the HOF composition (one fused loop, no intermediate
-    // arrays).
+    // The same brute-force top-k without the corpus spread: the native
+    // cosine_sim kernel on one scan task — must match the same oracle
+    // bit for bit.
     "knn_cosine_topk_native" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       Knn.bruteForce(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", 10, graft.GraftFunctions.cosineSim)
+        "vec_id", "embedding", 10)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -628,7 +627,7 @@ object ExtensionQueries extends graft.QueryModule {
       val emb = Tables.embeddings(s, dir)
       Knn.bruteForce(emb.join(keep, "vec_id"),
         emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", 10, graft.GraftFunctions.cosineSim)
+        "vec_id", "embedding", 10)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -642,7 +641,7 @@ object ExtensionQueries extends graft.QueryModule {
       Knn.cosinePairs(
         graft.util.Spread.spreadInput(Tables.embeddings(s, dir),
           col("vec_id")),
-        "vec_id", "embedding", 0.4, graft.GraftFunctions.cosineSim)
+        "vec_id", "embedding", 0.4)
         .orderBy(col("id_a"), col("id_b"))
     },
 
@@ -711,7 +710,7 @@ object ExtensionQueries extends graft.QueryModule {
     // by the oracle.
     "dedup_semantic" -> { (s, dir) =>
       Dedup.semanticDedup(Tables.embeddings(s, dir), "vec_id", "embedding",
-        centroids = 16, threshold = 0.4, graft.GraftFunctions.cosineSim)
+        centroids = 16, threshold = 0.4)
         .orderBy(col("vid"))
     },
 
@@ -730,7 +729,7 @@ object ExtensionQueries extends graft.QueryModule {
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
       Dedup.semanticDedupTrained(emb, "vec_id", "embedding",
         centroids = k, iterations = 3, threshold = 0.4,
-        graft.GraftFunctions.cosineSim, replayable = true)
+        replayable = true)
         .orderBy(col("vid"))
     },
 
@@ -748,7 +747,7 @@ object ExtensionQueries extends graft.QueryModule {
         math.ceil(math.sqrt(emb.count().toDouble)).toInt)
       Dedup.semanticDedupTrained(emb, "vec_id", "embedding",
         centroids = k, iterations = 3, threshold = 0.4,
-        graft.GraftFunctions.cosineSim, replayable = false)
+        replayable = false)
         .orderBy(col("vid"))
     },
 
@@ -833,8 +832,7 @@ object ExtensionQueries extends graft.QueryModule {
       // Corpus-side spread (r14, guide §2.5 — the knn_cosine_topk note).
       Knn.ivf(graft.util.Spread.spreadInput(emb, col("vec_id")),
         emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 10, centroids = 16, nprobe = 4,
-        cosineFn = graft.GraftFunctions.cosineSim)
+        "vec_id", "embedding", k = 10, centroids = 16, nprobe = 4)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -860,7 +858,7 @@ object ExtensionQueries extends graft.QueryModule {
       Knn.lshCosine(graft.util.Spread.spreadInput(emb, col("vec_id")),
         emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, dims = 64,
-        cosineFn = graft.GraftFunctions.cosineSim, probes = 0)
+        probes = 0)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -881,7 +879,7 @@ object ExtensionQueries extends graft.QueryModule {
       Knn.lshCosine(graft.util.Spread.spreadInput(emb, col("vec_id")),
         emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10, dims = 64,
-        cosineFn = graft.GraftFunctions.cosineSim, probes = -1)
+        probes = -1)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -893,8 +891,7 @@ object ExtensionQueries extends graft.QueryModule {
     "knn_pq_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       Knn.pqTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, m = 16, codebook = 16, dims = 64,
-        dotFn = graft.GraftFunctions.dotProduct)
+        k = 10, m = 16, codebook = 16, dims = 64)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -909,8 +906,7 @@ object ExtensionQueries extends graft.QueryModule {
       Knn.ivfPq(graft.util.Spread.spreadInput(emb, col("vec_id")),
         emb.filter(col("vec_id") < 5), "vec_id", "embedding",
         k = 10, centroids = 16, nprobe = 4, m = 16, codebook = 16,
-        dims = 64, cosineFn = graft.GraftFunctions.cosineSim,
-        dotFn = graft.GraftFunctions.dotProduct)
+        dims = 64)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -931,8 +927,7 @@ object ExtensionQueries extends graft.QueryModule {
       Knn.ivfPq(graft.util.Spread.spreadInput(emb, col("vec_id")),
         emb.filter(col("vec_id") < 5), "vec_id", "embedding",
         k = 10, centroids = 16, nprobe = 4, m = 16, codebook = 16,
-        dims = 64, cosineFn = graft.GraftFunctions.cosineSim,
-        dotFn = graft.GraftFunctions.dotProduct, refine = 50)
+        dims = 64, refine = 50)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -956,7 +951,7 @@ object ExtensionQueries extends graft.QueryModule {
     "knn_quantized_topk" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       Knn.bruteForceQuantized(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", 10, dotFn = graft.GraftFunctions.dotProduct)
+        "vec_id", "embedding", 10)
         .orderBy(col("query_id"), col("rk"))
     },
 
@@ -982,8 +977,6 @@ object ExtensionQueries extends graft.QueryModule {
         .spreadInput(Tables.embeddings(s, dir), col("vec_id"))
         .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val qs = emb.filter(col("vec_id") < 5)
-      val cos = graft.GraftFunctions.cosineSim _
-      val dot = graft.GraftFunctions.dotProduct _
       def ids(df: DataFrame, m: String) =
         df.select(lit(m).as("method"), col("query_id"), col("neighbor_id"))
       // Resolve the adaptive signature width ONCE for both LSH legs —
@@ -993,19 +986,19 @@ object ExtensionQueries extends graft.QueryModule {
         .select(col("query_id"), col("neighbor_id"))
       val methods =
         ids(Knn.ivf(emb, qs, "vec_id", "embedding", k = 10,
-          centroids = 16, nprobe = 4, cosineFn = cos), "ivf")
+          centroids = 16, nprobe = 4), "ivf")
         .union(ids(Knn.lshCosine(emb, qs, "vec_id", "embedding", k = 10,
-          dims = 64, bits = lshBits, cosineFn = cos, probes = 0), "lsh"))
+          dims = 64, bits = lshBits, probes = 0), "lsh"))
         .union(ids(Knn.lshCosine(emb, qs, "vec_id", "embedding", k = 10,
-          dims = 64, bits = lshBits, cosineFn = cos,
-          probes = Knn.autoProbes(lshBits)), "lsh_mp"))
+          dims = 64, bits = lshBits, probes = Knn.autoProbes(lshBits)),
+          "lsh_mp"))
         .union(ids(Knn.pqTopK(emb, qs, "vec_id", "embedding", k = 10,
-          m = 16, codebook = 16, dims = 64, dotFn = dot), "pq"))
+          m = 16, codebook = 16, dims = 64), "pq"))
         .union(ids(Knn.bruteForceQuantized(emb, qs, "vec_id", "embedding",
-          10, dotFn = dot), "sq"))
+          10), "sq"))
         .union(ids(Knn.ivfPq(emb, qs, "vec_id", "embedding", k = 10,
-          centroids = 16, nprobe = 4, m = 16, codebook = 16, dims = 64,
-          cosineFn = cos, dotFn = dot), "ivfpq"))
+          centroids = 16, nprobe = 4, m = 16, codebook = 16, dims = 64),
+          "ivfpq"))
       val grid = methods.select("method").distinct()
       // Every (method, exact-neighbor) cell exists via the broadcast
       // method grid, so a zero-overlap query reports recall 0.0 instead

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftFunctions, SparkTestBase}
+import graft.SparkTestBase
 import graft.model.Tables
 
 class CosineSimilaritySpec extends AnyFunSuite with SparkTestBase {
@@ -14,8 +14,8 @@ class CosineSimilaritySpec extends AnyFunSuite with SparkTestBase {
     val both = emb.as("a").join(emb.as("b"), $"a.vec_id" < $"b.vec_id")
       .limit(2000)
       .select(
-        VectorFunctions.cosine($"a.embedding", $"b.embedding").as("hof"),
-        GraftFunctions.cosineSim($"a.embedding", $"b.embedding").as("native"))
+        HofVectors.cosine($"a.embedding", $"b.embedding").as("hof"),
+        VectorFunctions.cosine($"a.embedding", $"b.embedding").as("native"))
       .as[(Double, Double)].collect()
     assert(both.nonEmpty)
     both.foreach { case (h, n) => assert(h == n, s"$h != $n") }
@@ -35,7 +35,7 @@ class CosineSimilaritySpec extends AnyFunSuite with SparkTestBase {
       (Array(0.0f, 0.0f), Array(1.0f, 2.0f)),
       (Array(3.0f, 4.0f), Array(3.0f, 4.0f)),
     ).toDF("a", "b")
-    val rows = df.select(GraftFunctions.cosineSim($"a", $"b")).collect()
+    val rows = df.select(VectorFunctions.cosine($"a", $"b")).collect()
     assert(rows(0).isNullAt(0))
     assert(math.abs(rows(1).getDouble(0) - 1.0) < 1e-15)
   }

@@ -35,6 +35,23 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     assert(perQuery.values.forall(_.map(_._3).sorted.toSeq == Seq(1, 2, 3, 4, 5)))
   }
 
+  test("bruteForce scores a short corpus vector over the common prefix, as cosine does") {
+    val q = Seq(1.0f, 2.0f, -0.5f, 3.0f)
+    val short = Seq(0.25f, -1.0f, 4.0f)
+    val corpus = Seq((1L, q), (2L, short), (3L, q.map(_ * -1.0f))).toDF("id", "v")
+    val got = Knn.bruteForce(corpus, corpus.filter($"id" === 1L), "id", "v", 2)
+      .filter($"neighbor_id" === 2L).select("cosine").as[Double].collect()
+    // The fold over the first three elements, in the kernel's order.
+    val (dot, na, nb) = q.zip(short).foldLeft((0.0, 0.0, 0.0)) {
+      case ((d, a, b), (x, y)) => (d + x.toDouble * y, a + x.toDouble * x,
+        b + y.toDouble * y) }
+    val want = dot / (math.sqrt(na) * math.sqrt(nb))
+    assert(got.toSeq == Seq(want))
+    val direct = corpus.as("a").join(corpus.as("b"), $"a.id" === 1L && $"b.id" === 2L)
+      .select(VectorFunctions.cosine($"a.v", $"b.v")).as[Double].head()
+    assert(direct == want)
+  }
+
   test("kmeans yields the requested centroids with the input dimension") {
     val emb = Tables.embeddings(spark, sf)
     val cents = Knn.kmeans(emb, "vec_id", "embedding", centroids = 8, iterations = 2)
@@ -59,6 +76,19 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     val again = Knn.trainSample(vecs.repartition(7), cap = 100, n = 500)
       .select("vid").as[Long].collect().toSet
     assert(again == sample.select("vid").as[Long].collect().toSet)
+  }
+
+  test("kmeans jobs: a fixed set-up, then one aggregate per Lloyd's iteration") {
+    val emb = Tables.embeddings(spark, sf)
+    def jobs(iterations: Int): Int =
+      jobsStartedBy(Knn.kmeans(emb, "vec_id", "embedding", centroids = 8,
+        iterations = iterations))._2
+    // Set-up: the sample's count (two AQE stages), its pin and the
+    // initial centroids' collect. Each iteration is the two shuffle
+    // stages and the result of its mean aggregation; the centroids ride
+    // in as a literal, so no broadcast job (a broadcast LocalRelation
+    // made it 4 per iteration).
+    assert((jobs(1), jobs(3)) == (4 + 3, 4 + 3 * 3))
   }
 
   // Note: on weakly-clustered fixture embeddings trained centroids are
@@ -447,8 +477,7 @@ class KnnSpec extends AnyFunSuite with SparkTestBase {
     val qs = emb.filter($"vec_id" < 5)
     val exact = Knn.bruteForce(emb, qs, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    val sq = Knn.bruteForceQuantized(emb, qs, "vec_id", "embedding", 10,
-        dotFn = graft.GraftFunctions.dotProduct)
+    val sq = Knn.bruteForceQuantized(emb, qs, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val expected = exact.groupBy(_._1).map { case (q, ns) =>
       q -> ns.count(sq.contains).toDouble / 10.0

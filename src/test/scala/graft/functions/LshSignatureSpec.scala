@@ -13,7 +13,7 @@ import graft.model.Tables
 /** The higher-order-function LSH plan the native
   * [[graft.functions.expressions.LshSignature]] kernel replaced, kept as
   * the reference it is checked against: planes from Spark expressions,
-  * per-plane [[VectorFunctions.dotNative]] dots folded by `aggregate`,
+  * per-plane [[VectorFunctions.dot]] dots folded by `aggregate`,
   * margin-ranked probes by `array_sort`, and the per-table explode +
   * `(t, bucket)` join + pair-dedup aggregate search. */
 object LshReference {
@@ -43,7 +43,7 @@ object LshReference {
         explode(sequence(lit(0), lit(tables - 1))).as("t"),
         col("__planes"))
       .withColumn("__dots", transform(sequence(lit(0), lit(bits - 1)), p =>
-        VectorFunctions.dotNative(col("v"),
+        VectorFunctions.dot(col("v"),
           element_at(col("__planes"), col("t") * bits + p + 1)
             .getField("w"))))
     val base = aggregate(sequence(lit(0), lit(bits - 1)), lit(0L),
@@ -79,7 +79,7 @@ object LshReference {
       .filter(col("query_id") =!= col("vid"))
       .groupBy(col("query_id"), col("vid"))
       .agg(first(col("qv")).as("qv"), first(col("v")).as("v"))
-      .withColumn("cosine", VectorFunctions.cosineNative(col("qv"), col("v")))
+      .withColumn("cosine", VectorFunctions.cosine(col("qv"), col("v")))
     cand.withColumn("rk", row_number().over(Window
         .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vid"))))
       .filter(col("rk") <= k)

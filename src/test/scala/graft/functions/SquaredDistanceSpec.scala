@@ -19,8 +19,8 @@ class SquaredDistanceSpec extends AnyFunSuite with SparkTestBase {
     val both = emb.as("a").join(emb.as("b"), $"a.vec_id" < $"b.vec_id")
       .limit(2000)
       .select(
-        VectorFunctions.l2sq($"a.embedding", $"b.embedding").as("hof"),
-        VectorFunctions.l2sqNative($"a.embedding", $"b.embedding").as("native"))
+        HofVectors.l2sq($"a.embedding", $"b.embedding").as("hof"),
+        VectorFunctions.l2sq($"a.embedding", $"b.embedding").as("native"))
       .as[(Double, Double)].collect()
     assert(both.nonEmpty)
     both.foreach { case (h, n) => assert(h == n, s"$h != $n") }
@@ -31,9 +31,9 @@ class SquaredDistanceSpec extends AnyFunSuite with SparkTestBase {
     val both = emb.as("a").join(emb.as("b"), $"a.vec_id" =!= $"b.vec_id")
       .limit(500)
       .select(
-        VectorFunctions.l2sqNative($"a.embedding",
+        VectorFunctions.l2sq($"a.embedding",
           VectorFunctions.toDouble($"b.embedding")).as("mixed"),
-        VectorFunctions.l2sqNative(
+        VectorFunctions.l2sq(
           VectorFunctions.toDouble($"a.embedding"),
           VectorFunctions.toDouble($"b.embedding")).as("wide"))
       .as[(Double, Double)].collect()
@@ -46,9 +46,9 @@ class SquaredDistanceSpec extends AnyFunSuite with SparkTestBase {
     val rows = emb.as("a").join(emb.as("b"), $"a.vec_id" =!= $"b.vec_id")
       .limit(500)
       .select(
-        VectorFunctions.cosineNative($"a.embedding",
+        VectorFunctions.cosine($"a.embedding",
           VectorFunctions.toDouble($"b.embedding")).as("mixed"),
-        VectorFunctions.cosine($"a.embedding", $"b.embedding").as("hof"))
+        HofVectors.cosine($"a.embedding", $"b.embedding").as("hof"))
       .as[(Double, Double)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (m, h) => assert(m == h, s"$m != $h") }
@@ -59,12 +59,12 @@ class SquaredDistanceSpec extends AnyFunSuite with SparkTestBase {
       (Seq(Some(1.0f), None), Seq(Some(1.0f), Some(2.0f))),
       (Seq.empty[Option[Float]], Seq.empty[Option[Float]]),
     ).toDF("a", "b")
-    val d = df.select(VectorFunctions.l2sqNative($"a", $"b")).collect()
+    val d = df.select(VectorFunctions.l2sq($"a", $"b")).collect()
     assert(d(0).isNullAt(0))
     assert(d(1).getDouble(0) == 0.0)
     val zc = Seq((Array(0.0f, 0.0f), Array(1.0f, 2.0f)))
       .toDF("a", "b")
-      .select(VectorFunctions.cosineNative($"a", $"b")).collect()
+      .select(VectorFunctions.cosine($"a", $"b")).collect()
     assert(zc(0).isNullAt(0))
   }
 

@@ -51,6 +51,16 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)
   }
 
+  test("vector queries score with the native kernels") {
+    // One scoring path per metric: no query falls back to the
+    // zip_with/aggregate composition the kernels replaced.
+    Seq("knn_cosine_topk", "knn_recall_at_k", "dedup_embedding_pairs",
+        "dedup_semantic").foreach { q =>
+      val p = planOf(q)
+      assert(p.contains("cosine_sim(") && !p.contains("zip_with"), s"$q:\n$p")
+    }
+  }
+
   test("knn_filtered_topk pushes the metadata predicate into the documents scan") {
     val p = planOf("knn_filtered_topk")
     // Pre-filter ANN: lang/n_chars reach the documents parquet scan as
