@@ -39,6 +39,17 @@ object Sessions {
     // this is a checkpoint FORMAT choice, invisible in results.
     .config("spark.sql.streaming.stateStore.rocksdb" +
       ".changelogCheckpointing.enabled", "true")
+    // Generated-class cache: Spark's JVM-wide CodeGenerator LRU holds
+    // 100 compiled classes by default, but a run of the benchmark's
+    // ingest_search (near-dup ingest + decay trigger + IVF + LSH search)
+    // uses ~195 distinct classes and one of etl_daily ~131, so each warm
+    // pass evicted and re-ran Janino on 211-240 / 85-97 of them; at 1000
+    // it compiles none (CodegenMetrics compile count). Measured on a
+    // 4-core host: ingest_search warm_s 5.48 → 3.31 s (10 pairs), while
+    // Metaspace after a GC at the end of a 6-pass run stayed at 173-174 MB
+    // (classes average 1.9 KB of bytecode). A static conf: CodeGenerator
+    // reads it once per JVM, so it is set here, not at runtime.
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def local(cpus: String): SparkSession = {
     val s = configure(SparkSession.builder()

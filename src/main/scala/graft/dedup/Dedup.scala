@@ -178,7 +178,11 @@ object Dedup {
     * key with a smaller-id batch row. Returns (survivors, their distinct
     * keys). Four plan branches read the buckets, so they are pinned and
     * the signature pipeline runs over the batch once — a batch-sized pin
-    * at any corpus size (the diamond semanticDedupAssigned pins). */
+    * at any corpus size (the diamond semanticDedupAssigned pins). Both
+    * outputs read `dropped`, and an ingest writes them as two queries,
+    * which share no exchange: it is pinned too (at most the batch's ids),
+    * so the index — O(corpus) at scale — is probed once per batch, not
+    * once per output. */
   private def bucketDedup(batch: DataFrame, buckets: DataFrame,
       index: DataFrame, idCol: String,
       key: Seq[String]): (DataFrame, DataFrame) = {
@@ -191,7 +195,7 @@ object Dedup {
         min(col("id")).over(Window.partitionBy(key.map(col): _*)))
       .filter(col("id") > col("__minid"))
       .select(col("id"))
-    val dropped = idxHits.union(internal).distinct()
+    val dropped = idxHits.union(internal).distinct().localCheckpoint()
     val kept = batch.join(dropped.withColumnRenamed("id", idCol),
       Seq(idCol), "left_anti")
     val keptKeys = banded.join(dropped, Seq("id"), "left_anti")

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -74,5 +75,16 @@ trait SparkTestBase {
       assert(seen.contains(sentinel), "sentinel job never reached the listener")
       (out, seen.asScala.count(_ == group))
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Classes Spark compiled while `body` runs, `body`'s result included:
+    * the count delta of the JVM-wide codegen compile-time histogram, one
+    * sample per Janino compile (a generated-class cache hit adds none).
+    * Compiles on other threads count too, so measure on a quiet session. */
+  def compiledDuring[T](body: => T): (T, Long) = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val out = body
+    (out, compiles.getCount - before)
   }
 }

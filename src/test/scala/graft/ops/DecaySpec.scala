@@ -101,4 +101,63 @@ class DecaySpec extends AnyFunSuite with SparkTestBase {
       .select($"decayed_sum").as[Double].collect()(0)
     assert(a == b)
   }
+
+  test("a decay stream stopped after one batch and restarted from its " +
+      "RocksDB changelog checkpoint equals an uninterrupted run") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.ops.Decay.{DecayEvent, DecayScore}
+    implicit val sql = spark.sqlContext
+    // The engine defaults this path must hold on.
+    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
+      .endsWith(".RocksDBStateStoreProvider"))
+    assert(spark.conf.get("spark.sql.streaming.stateStore.rocksdb" +
+      ".changelogCheckpointing.enabled") == "true")
+    val hl = 12.0
+    val micros = (s: String) => ts(s).getTime * 1000L
+    val b1 = Seq(
+      DecayEvent(1L, micros("2024-01-01 00:00:00"), 10.0, 1L),
+      DecayEvent(1L, micros("2024-01-01 06:00:00"), 3.0, 2L),
+      DecayEvent(2L, micros("2024-01-01 02:00:00"), 7.5, 3L),
+      DecayEvent(3L, micros("2024-01-01 04:00:00"), 1.0, 4L))
+    val b2 = Seq(
+      DecayEvent(1L, micros("2024-01-01 18:00:00"), 4.0, 5L),
+      DecayEvent(1L, micros("2024-01-01 03:00:00"), 2.0, 6L), // late
+      DecayEvent(2L, micros("2024-01-02 02:00:00"), 1.25, 7L),
+      DecayEvent(4L, micros("2024-01-01 09:00:00"), 6.0, 8L))
+    // Each key's last emitted score. With `restart`, the first query is
+    // stopped after batch 1 and a new query on the same checkpoint and
+    // source takes batch 2: its state comes back from the checkpoint.
+    def scores(restart: Boolean): (Map[Long, DecayScore], String) = {
+      val ckpt = java.nio.file.Files.createTempDirectory("decay_ckpt").toString
+      val out = new ConcurrentLinkedQueue[DecayScore]()
+      val input = MemoryStream[DecayEvent]
+      def start() = Decay.decayedSumStream(input.toDS(), hl).writeStream
+        .outputMode("update").option("checkpointLocation", ckpt)
+        .foreachBatch((df: Dataset[DecayScore], _: Long) =>
+          df.collect().foreach(out.add))
+        .start()
+      var q = start()
+      try {
+        input.addData(b1: _*); q.processAllAvailable()
+        if (restart) { q.stop(); q = start() }
+        input.addData(b2: _*); q.processAllAvailable()
+        assert(q.exception.isEmpty)
+      } finally q.stop()
+      (out.asScala.toSeq.groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.n_events) },
+        ckpt)
+    }
+    val (want, _) = scores(restart = false)
+    val (got, ckpt) = scores(restart = true)
+    assert(want.keySet == Set(1L, 2L, 3L, 4L))
+    assert(want(1L).n_events == 4L)
+    assert(got == want)
+    // The state was committed as RocksDB changelogs, not snapshots only.
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt, "state"))
+    val changelogs = try files.iterator().asScala
+      .count(_.getFileName.toString.endsWith(".changelog")) finally files.close()
+    assert(changelogs > 0, "no RocksDB changelog file in the checkpoint")
+  }
 }

@@ -1,9 +1,25 @@
 package graft.sink
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+
+/** A commit protocol whose job commit fails: every task has staged its
+  * files, and nothing is moved into the table. */
+final class FailingJobCommitProtocol(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(job: JobContext, commits: Seq[TaskCommitMessage]): Unit =
+    throw new java.io.IOException("job commit failed after staging")
+}
 
 class UpsertSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -103,5 +119,45 @@ class UpsertSpec extends AnyFunSuite with SparkTestBase {
     val second = spark.read.parquet(path).select("k", "v", "day")
       .as[(Int, String, String)].collect().toSet
     assert(first == second)
+  }
+
+  test("upsertPartitioned interrupted between staging and the partition " +
+      "overwrite leaves the table byte-identical, and a replay converges") {
+    val dir = Files.createTempDirectory("upsert_interrupted").toString
+    val day1 = Seq((1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3"))
+      .toDF("k", "v", "day")
+    // Touches d2 and d3 (updates) and d4 (a new partition); d1 stays.
+    val delta = Seq((2, "b2", "d2"), (3, "c2", "d3"), (4, "e", "d4"))
+      .toDF("k", "v", "day")
+    def upsert(path: String, src: org.apache.spark.sql.DataFrame): Unit =
+      Upsert.upsertPartitioned(spark, path, src, Seq("k"), "day")
+    def table(path: String) = spark.read.parquet(path)
+      .select("k", "v", "day").as[(Int, String, String)].collect().toSet
+    // Every file and directory under `root` (hidden ones included, so a
+    // leftover staging directory shows), with each file's bytes.
+    def tree(root: String): Map[String, Vector[Byte]] = {
+      val all = Files.walk(Paths.get(root))
+      try all.iterator().asScala.map { (f: Path) =>
+        Paths.get(root).relativize(f).toString ->
+          (if (Files.isRegularFile(f)) Files.readAllBytes(f).toVector else Vector.empty)
+      }.toMap
+      finally all.close()
+    }
+    val want = s"$dir/want"
+    upsert(want, day1)
+    upsert(want, delta)
+
+    val path = s"$dir/t"
+    upsert(path, day1)
+    val before = tree(path)
+    val e = intercept[Exception](withSQLConf("spark.sql.sources.commitProtocolClass" ->
+        classOf[FailingJobCommitProtocol].getName)(upsert(path, delta)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("job commit failed")), e)
+    assert(tree(path) == before, "an interrupted rewrite must leave the old table")
+    upsert(path, delta)
+    assert(table(path) == table(want))
+    assert(table(path) == Set((1, "a", "d1"), (2, "b2", "d2"), (3, "c2", "d3"),
+      (4, "e", "d4")))
   }
 }

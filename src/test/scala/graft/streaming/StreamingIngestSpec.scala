@@ -5,12 +5,17 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 
-class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
+class StreamingIngestSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def tmpDir(prefix: String): String =
@@ -254,8 +259,10 @@ class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
       })
     // The embedding form signs with the native LSH kernel, whose planes
     // are built on the driver: no plane-fold jobs (16, 16 before it).
-    assert(got == Map("append" -> Seq(7, 7), "near-dup" -> Seq(12, 14),
-      "embedding" -> Seq(12, 14), "MERGE" -> Seq(5, 6)))
+    // The near-dup forms pin their dropped ids, so the index is probed
+    // by one job, not by both writes (12, 14 before that).
+    assert(got == Map("append" -> Seq(7, 7), "near-dup" -> Seq(11, 12),
+      "embedding" -> Seq(11, 12), "MERGE" -> Seq(5, 6)))
   }
 
   test("near-dup ingest: a failed band-index write still lands the " +
@@ -291,5 +298,45 @@ class StreamingIngestSpec extends AnyFunSuite with SparkTestBase {
     ingest(b1, wh, 1L)
     assert(docsOf(wh) == docsOf(want))
     assert(idxOf(wh) == idxOf(want))
+  }
+
+  /** Scans of files under a directory named `table` in the plans of the
+    * queries that finish while `body` runs (writes, collects and eager
+    * pins alike). Listener events arrive in order on one queue, so once
+    * a sentinel query is seen, every earlier query was too. */
+  private def scansOf(table: String)(body: => Unit): Int = {
+    val sentinel = java.util.UUID.randomUUID().toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    def isSentinel(qe: QueryExecution) = qe.analyzed.toString.contains(sentinel)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(sentinel)).collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!plans.asScala.exists(isSentinel) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(plans.asScala.exists(isSentinel), "sentinel query never reached the listener")
+      plans.asScala.toSeq.filterNot(isSentinel).map(qe => collect(qe.executedPlan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains(s"/$table")) => s
+      }.size).sum
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a near-dup ingest call scans the persisted band index once") {
+    val wh = tmpDir("ndp_scans")
+    StreamingIngest.ingestBatchNearDup(
+      Seq((1L, longA), (2L, longA), (3L, null)).toDF("doc_id", "text"),
+      wh, "docs", "text", "doc_id", batchId = 0L)
+    // Batch 1 probes batch 0's index; its survivors and their band keys
+    // are written by two queries that both need the dropped ids.
+    val scans = scansOf("docs_bandidx")(StreamingIngest.ingestBatchNearDup(
+      Seq((4L, longA), (5L, longB), (6L, "hi")).toDF("doc_id", "text"),
+      wh, "docs", "text", "doc_id", batchId = 1L))
+    assert(scans == 1)
   }
 }
