@@ -2,12 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for session config shared by Verify, Bench, and tests, so the
-  * engine behaves identically under every entry point. */
+/** One place for session config shared by Verify, Bench, Explain,
+  * perfbench and the tests, so the engine behaves identically under every
+  * entry point: [[configure]] is the one builder step, and it installs
+  * [[GraftExtensions]]. */
 object Sessions {
 
   /** Configs the engine requires regardless of entry point. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
+    .withExtensions(new GraftExtensions)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.adaptive.enabled", "true")
@@ -57,7 +60,6 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(s)
     s
   }
 }

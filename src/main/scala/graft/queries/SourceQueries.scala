@@ -24,7 +24,7 @@ object SourceQueries extends graft.QueryModule {
     // timestamp format, and string columns.
     "src_csv_roundtrip" -> { (s, dir) =>
       import s.implicits._
-      val path = FileSources.scratchDir("csv", "orders", dir)
+      val path = FileSources.scratchDir("csv", "orders")
       val back = FileSources.csvRoundTrip(Tables.orders(s, dir), path)
       back.groupBy($"o_orderstatus").agg(
           count(lit(1)).as("n_orders"),
@@ -39,7 +39,7 @@ object SourceQueries extends graft.QueryModule {
     // reader and numeric/string fidelity through a second text format.
     "src_json_roundtrip" -> { (s, dir) =>
       import s.implicits._
-      val path = FileSources.scratchDir("json", "customer", dir)
+      val path = FileSources.scratchDir("json", "customer")
       val back = FileSources.jsonRoundTrip(Tables.customer(s, dir), path)
       back.groupBy($"c_mktsegment").agg(
           count(lit(1)).as("n_customers"),
@@ -54,7 +54,7 @@ object SourceQueries extends graft.QueryModule {
     // the oracle reading the original parquet value-for-value.
     "src_orc_roundtrip" -> { (s, dir) =>
       import s.implicits._
-      val path = FileSources.scratchDir("orc", "lineitem", dir)
+      val path = FileSources.scratchDir("orc", "lineitem")
       // Spread before the ORC write (r15, guide §2.5/§6): a one-task
       // source serializes both the write (one writer) and the
       // read-back (one unsplit file feeding the aggregate). The spread

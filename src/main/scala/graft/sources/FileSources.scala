@@ -89,11 +89,10 @@ object FileSources {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).orc(path)
 
-  /** Deterministic scratch dir for a (format, table, sfDir) triple —
-    * keyed by the sf dir's basename so sf0.01 and sf0.1 runs never read
-    * each other's files. */
-  def scratchDir(format: String, table: String, sfDir: String): String = {
-    val sfName = new java.io.File(sfDir).getName
-    s"${sys.props("java.io.tmpdir")}/graft_${format}_${table}_$sfName"
-  }
+  /** A new scratch dir per call, deleted at JVM exit. A round-trip
+    * DataFrame lists its dir's files when it is built, so a shared dir
+    * would be rewritten under an earlier DataFrame by the next build of
+    * the same query (or by another JVM). */
+  def scratchDir(format: String, table: String): String =
+    org.apache.spark.sql.GraftSqlShim.tempDir(s"graft_${format}_$table")
 }

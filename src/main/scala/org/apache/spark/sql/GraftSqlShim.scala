@@ -10,6 +10,11 @@ object GraftSqlShim {
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A new directory under `java.io.tmpdir`, deleted at JVM exit
+    * (Spark's private[spark] `Utils.createTempDir`). */
+  def tempDir(namePrefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = namePrefix).getPath
+
   /** Column ⇄ Catalyst Expression (Spark 4 removed public Column.expr). */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)

@@ -13,18 +13,14 @@ import org.apache.spark.sql.SparkSession
   * lazy val; sharing across suites avoids repeated JVM-wide session setup
   * in the forked test JVM). */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = Sessions.configure(
-      SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_wh_test").toString))
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Sessions.configure(
+    SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-tests")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_wh_test").toString))
+    .getOrCreate()
 }
 
 trait SparkTestBase {

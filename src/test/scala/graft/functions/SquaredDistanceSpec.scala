@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftFunctions, SparkTestBase}
+import graft.SparkTestBase
 import graft.model.Tables
 
 /** Pins the native kernels' interchangeability guarantees that the
@@ -69,7 +69,6 @@ class SquaredDistanceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("registered in SQL: sq_dist callable from spark.sql") {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, sf).createOrReplaceTempView("emb_sqd_tmp")
     val got = spark.sql(
       """SELECT sq_dist(a.embedding, b.embedding) AS d

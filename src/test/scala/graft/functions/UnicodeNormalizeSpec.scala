@@ -67,7 +67,6 @@ class UnicodeNormalizeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("SQL registration: unicode_norm and strip_accents are callable") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       s"SELECT unicode_norm('$decomposed', 'NFC') AS n, " +
         s"strip_accents('$decomposed') AS s")
@@ -76,7 +75,6 @@ class UnicodeNormalizeSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("invalid or non-literal form fails at plan time, not per row") {
-    GraftFunctions.register(spark)
     intercept[AnalysisException] {
       spark.sql("SELECT unicode_norm('x', 'NFX')").collect()
     }

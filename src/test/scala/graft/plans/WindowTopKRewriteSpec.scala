@@ -34,13 +34,21 @@ class WindowTopKRewriteSpec extends AnyFunSuite with SparkTestBase {
     assert(got == expected)
   }
 
+  private def withRuleExcluded[T](f: => T): T =
+    withSQLConf("spark.sql.optimizer.excludedRules" -> WindowTopKRewrite.ruleName)(f)
+
   /** Window-formulation reference rows computed with the rewrite off. */
-  private def withRuleDisabled(df: => org.apache.spark.sql.DataFrame) = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev.filterNot(_ == WindowTopKRewrite)
-    try df.select("o_orderkey", "o_custkey", "o_totalprice").collect().toSet
-    finally spark.experimental.extraOptimizations = prev
+  private def withRuleDisabled(df: => org.apache.spark.sql.DataFrame) =
+    withRuleExcluded(df.select("o_orderkey", "o_custkey", "o_totalprice").collect().toSet)
+
+  test("a rewritten idiom plans no WindowGroupLimit") {
+    // The rule runs in operator optimization, before Spark infers its own
+    // partial/final window group limit, so TopKPerKey is the only top-k
+    // in the plan; with the rule excluded, Spark's limit is what plans.
+    val p = topkIdiom(3).queryExecution.executedPlan.toString
+    assert(p.contains("TopKPerKeyPartial") && !p.contains("WindowGroupLimit"), p)
+    val off = withRuleExcluded(topkIdiom(3).queryExecution.executedPlan.toString)
+    assert(off.contains("WindowGroupLimit") && !off.contains("TopKPerKey"), off)
   }
 
   test("rank kept in the output is NOT rewritten (ranks must be produced)") {

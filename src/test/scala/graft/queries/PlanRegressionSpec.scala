@@ -46,6 +46,15 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("TopKPerKeyPartial") && p.contains("TopKPerKeyFinal"), p)
   }
 
+  test("knn_recall_at_k: every per-query top-k is TopKPerKey alone, no WindowGroupLimit") {
+    // The window → top-k rewrite runs before Spark infers its own window
+    // group limit, so no rewritten idiom keeps a WindowGroupLimit pair
+    // (and its two sorts) under the TopKPerKey operator.
+    val lines = planOf("knn_recall_at_k").linesIterator.toSeq
+    assert(lines.count(_.contains("WindowGroupLimit")) == 0, lines.mkString("\n"))
+    assert(lines.count(_.contains("TopKPerKeyFinal")) == 17, lines.mkString("\n"))
+  }
+
   test("knn brute force broadcasts the probe set (corpus never shuffles)") {
     val p = planOf("knn_cosine_topk_native")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)

@@ -82,4 +82,16 @@ class FileSourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(back.schema("ts").dataType.typeName == "timestamp")
     assert(back.schema("id").dataType.typeName == "long")
   }
+
+  test("a round-trip query still reads after the same query is built again") {
+    // Each build writes its own scratch dir: a second build must not
+    // replace the files the first one listed.
+    Seq("src_csv_roundtrip", "src_json_roundtrip", "src_orc_roundtrip").foreach { q =>
+      val first = graft.SparkEntry.queries(q)(spark, sf)
+      val second = graft.SparkEntry.queries(q)(spark, sf)
+      val rows = second.collect().toSeq
+      assert(rows.nonEmpty, q)
+      assert(first.collect().toSeq == rows, q)
+    }
+  }
 }

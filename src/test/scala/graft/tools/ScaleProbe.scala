@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -83,14 +83,8 @@ object ScaleProbe {
       s"unknown mode: $mode")
     val skew = mode == "skew" || mode == "nearskew"
     require(factor >= 1, s"factor must be >= 1: $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      Runtime.getRuntime.availableProcessors().toString)
     val stride = 100000000L
 
     val docs = Tables.documents(spark, src)
